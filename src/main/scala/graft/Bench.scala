@@ -2,93 +2,43 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — ALWAYS lands a parseable one-line JSON artifact.
+/** Benchmark main: a FIXED measurement protocol that always lands a
+  * parseable one-line JSON artifact. The complete line is reprinted after
+  * every finished unit of work and from a shutdown hook, so the last
+  * stdout line is the freshest complete artifact wherever a kill lands
+  * (r4 recorded nothing: it printed once, after the last round).
   *
-  * Emission contract (r5 — the r4 driver run recorded NOTHING because the
-  * old harness printed its line only after every round finished and the
-  * driver's outer timeout killed it first): the complete artifact line is
-  * (re)printed after EVERY finished unit of work — each leg, each gate
-  * pass, each corpus point — and once more from a shutdown hook, so the
-  * freshest complete line is the last thing on stdout no matter where a
-  * SIGTERM/timeout lands. The last line wins; every line is complete and
-  * self-describing. The line is kept ≤ [[MaxLineChars]] so it survives
-  * tail-window truncation intact.
+  * Protocol, fixed before the first sample (no measured number decides
+  * whether another sample is taken): a ~4 s memory probe; the
+  * [[HeadlineTag]] point, [[HeadlineRounds]] symmetric interleaved rounds
+  * of forked pinned legs (1,4, 1,4, 1,4); [[GatePasses]] passes of the
+  * gate queries (per-query min); the [[PrimaryTag]] point,
+  * [[PrimaryRounds]] round — large enough that corpus-linear work
+  * dominates the parallelism-independent floor. k comes from BASELINE.md's
+  * dress timings (about 230 s per 24k round, about 600 s for the 384k
+  * corpus plus its round): the protocol fits the default deadline on a
+  * quiet host.
   *
-  * Scheduling: ONE wall-clock deadline measured from main() entry
-  * (SPARK_GRAFT_BENCH_DEADLINE, default 1680 s — the r3 driver run
-  * completed at 1898 s total including sbt boot; r4 was killed) covers
-  * EVERYTHING: the memory probe, corpus generation, gate passes, JIT
-  * warmups, legs, the 2× point. The r4 budget charged only leg walls, so
-  * warmups (measured 249.5 s each under contention), gate passes and
-  * corpus gen were free and the mandatory path alone could blow the
-  * driver's timeout. Work runs cheapest-evidence-first:
-  *   1. ~4 s memory-bandwidth probe: the box's own 1→4-thread memcpy
-  *      scaling (measured ~0.81 on this host) — the hardware-ceiling
-  *      context that makes a recorded 0.7x efficiency self-interpreting;
-  *   2. 24k-page fast-window point, ONE round: a scaling number exists
-  *      in the artifact within the first few minutes;
-  *   3. gate-query suite (pass 1; the min-of-2 second pass runs
-  *      immediately only if pass 1 was uncontended, else it is deferred
-  *      behind the primary point);
-  *   4. 384k-page primary point, 2 interleaved rounds (round 2 at a
-  *      0.8 projection margin — a truncated round cannot bias the
-  *      ratio, see the symmetric-truncation note on pointStats);
-  *   5. optional work in keep-priority order, each unit gated on a
-  *      projected-fit check against measured samples: deferred gate
-  *      pass 2 → fast-window round 2 → 2× corpus point → spread-gated
-  *      extra primary rounds → extra fast-window rounds (these last use
-  *      OPTIMISTIC best-sample projections — see projectLeg — so one
-  *      throttled sample can't leave the deadline tail idle, and run
-  *      not only on an unstable spread but also while the headline
-  *      efficiency sits below the north-rule target
-  *      (SPARK_GRAFT_BENCH_EFF_TARGET, default 0.8) — see
-  *      wantMoreRounds). What gets shed is recorded in the artifact
-  *      ("shed").
+  * ONE deadline from main() entry (SPARK_GRAFT_BENCH_DEADLINE, default
+  * 1680 s: r3 took 1898 s with sbt boot, r4 was killed) covers
+  * everything. A unit (corpus, round, gate pass) starts only while the
+  * deadline has room — no projections — and is named in "shed" when it
+  * does not; each leg's kill-timer is the remaining deadline.
   *
-  * Kill semantics (r4: a SIGTERM'd fork silently became an unpinned
-  * in-process leg, which then crashed): a forked leg that dies on an
-  * EXTERNAL kill signal (rc 143/137/124) means the environment is tearing
-  * the bench down — stop starting work, emit what was measured (including
-  * a contract line the leg printed before the kill landed in its
-  * teardown), exit cleanly. A leg that overruns OUR OWN kill-timer is a
-  * different event — it says this leg is too slow for its budget, not
-  * that anything external is killing us — so only that leg is shed
-  * (tagged timeout_*) and the bench continues with the work that still
-  * fits. The in-process fallback remains ONLY for genuine can't-fork
-  * environments (no taskset/classpath) AND only while no other
-  * SparkSession is live in this JVM (getOrCreate would return the
-  * 32-core gates session and stop() would kill the gate suite under it);
-  * it is tagged "fallback":true in the artifact, because an unpinned
-  * local[1] leg inside the 32-core JVM free-rides ~31 cores for GC/JIT —
-  * the exact measurement error the forked-pinned design exists to
-  * prevent.
+  * Kill semantics: a leg dying on an EXTERNAL signal (rc 143/137/124)
+  * means the environment is tearing the bench down — keep any contract
+  * line it printed before the kill, tag `killed_*`, start nothing new. A
+  * leg overrunning OUR kill-timer has used up the deadline: tag
+  * `timeout_*`, its round drops out of both legs' statistics (symmetric
+  * truncation, [[legStatsFor]]) and nothing new starts. There is no
+  * in-process substitute leg: unpinned inside this JVM it free-rides the
+  * other cores for GC/JIT, the error forking exists to prevent.
   *
-  * Leg scheduling (unchanged from r4, every rule measurement-backed):
-  *  - SYMMETRIC INTERLEAVED ROUNDS (1,4, 1,4, …), per-leg MIN over
-  *    rounds: host throughput drifts ±30-80% between identical runs
-  *    (BASELINE.md); min-of-k estimates the uncontended machine and
-  *    interleaving stops one contention window from owning every sample
-  *    of one leg. All samples are disclosed (runs_sec).
-  *  - LOAD-AWARE PINNING: each run is pinned (taskset) to the `cores`
-  *    least-loaded CPUs measured from /proc/stat just before the fork.
-  *  - Fresh pinned JVM per leg + deadline-aware JIT warmup inside the
-  *    leg (see [[BenchLeg]]).
-  *  - RAM-BACKED SCRATCH: corpus, stage workdirs, shuffle dirs on tmpfs
-  *    ([[BenchLeg.scratchRoot]]) — the shared virtio disk is a drifting
-  *    parallelism-independent bottleneck a real cluster doesn't have.
-  *
-  * Headline scaling_efficiency: every corpus point is the same job at
-  * two pinned parallelism levels (the sandbox stand-in for N and 4N
-  * executors, per driver instructions — no real cluster exists here);
-  * the headline is the BEST measured point, named in "scaling_source",
-  * with every point's efficiency and task-seconds disclosed alongside in
-  * "points" — the same estimate-the-uncontended-machine rationale as
-  * per-leg min-of-k, extended one level: corpus size is a free parameter
-  * of the stand-in, and the regime during a point's 4-core samples (how
-  * hard the host's shared memory fabric was being throttled, visible as
-  * task_sec inflation vs the 1-core leg) is environment, not engine. The
-  * "mem_probe" object carries the fabric's own measured 1→4-thread
-  * scaling so the reader can attribute any sub-1.0 residual in place.
+  * Each point is the same job at two pinned parallelism levels (the
+  * stand-in for N and 4N executors). Host throughput drifts ±30-80%
+  * between identical runs (BASELINE.md), so each leg reports min, median
+  * and all samples; `scaling_efficiency` is the [[HeadlineTag]] point's
+  * min-over-rounds ratio whatever the other point reads.
   */
 object Bench {
 
@@ -98,35 +48,35 @@ object Bench {
     * bloated line would be decapitated). */
   private[graft] val MaxLineChars = 1900
 
-  /** One leg sample. `sec` is the measured window (Pipeline.run +
-    * triples count); `overheadSec` = fork wall − sec (JVM/session boot +
-    * warmup), kept separate because only `sec` scales with corpus size —
-    * projections must not multiply warmup cost by page ratios. */
+  private[graft] val HeadlineTag = "pages24k"
+  private[graft] val HeadlineRounds = 3
+  private[graft] val PrimaryTag = "pages384k"
+  private[graft] val PrimaryRounds = 1
+  private[graft] val GatePasses = 2
+  private[graft] val LegCores = Seq(1, 4)
+  private val pagesOf = Map(HeadlineTag -> 24000, PrimaryTag -> 384000)
+
+  /** Kept back for the final emit, scratch delete and JVM teardown; a
+    * unit starts only with more than MinUnitSec left beyond it. */
+  private val ReserveSec = 25.0
+  private val MinUnitSec = 30.0
+
+  /** One leg sample: `sec` is the measured window (Pipeline.run +
+    * triples count); task/gc/jit are the leg's regime evidence. */
   private[graft] case class Run(triples: Long, sec: Double, taskSec: Double,
-      gcSec: Double, jitSec: Double, warmup: String, fallback: Boolean,
-      overheadSec: Double, coldSec: Double = 0.0)
+      gcSec: Double, jitSec: Double)
 
-  private[graft] sealed trait LegOutcome
-  private[graft] case class LegOk(run: Run) extends LegOutcome
-  /** external kill signal (rc 143/137/124): the environment is tearing the
-    * bench down. May still carry a measurement — a kill that lands in the
-    * leg's teardown arrives AFTER the contract line was printed. */
-  private[graft] case class LegKilled(run: Option[Run]) extends LegOutcome
-  /** OUR kill-timer fired: the leg is too slow for its budget in this
-    * regime — evidence about the leg, not of external teardown. */
-  private[graft] case object LegTimedOut extends LegOutcome
-  /** could not exec / leg errored: in-process fallback is permitted. */
-  private[graft] case object LegInfraFail extends LegOutcome
-
-  /** Best-run stats for one leg of one corpus point. */
-  private[graft] case class LegStat(cores: Int, sec: Double, tps: Double,
-      taskSec: Double, gcSec: Double, jitSec: Double, runsSec: Seq[Double],
-      warmup: String, fallback: Boolean, coldSec: Double = 0.0)
+  /** Per-leg stats of one point over the counted rounds: the min sample
+    * (`best`), the median wall, and every sample's wall. */
+  private[graft] case class LegStat(cores: Int, best: Run, medSec: Double,
+                                    runsSec: Seq[Double]) {
+    def tps: Double = best.triples / best.sec
+  }
 
   /** One corpus point: the same job at each parallelism level. */
   private[graft] case class PointStat(tag: String, pages: Int, legs: Seq[LegStat]) {
-    /** (thr_high/thr_low) / (cores_high/cores_low); defined once both
-      * legs have a sample. */
+    /** (thr_high/thr_low) / (cores_high/cores_low) over per-leg minima;
+      * defined once both legs have a sample. */
     def eff: Option[Double] =
       if (legs.size >= 2)
         Some((legs.last.tps / legs.head.tps) /
@@ -140,281 +90,122 @@ object Bench {
   private[graft] def entitiesFor(pages: Int): Int =
     math.min(32000, math.max(400, pages / 6))
 
-  /** Should a point run another refinement round? Beyond the spread
-    * trigger (samples disagree >stableSpread, so the min is not yet the
-    * uncontended machine), a point also keeps sampling while the run's
-    * HEADLINE efficiency (best across points) sits below the north-rule
-    * target: a pair of windows throttled by the same regime produces a
-    * LOW spread with every sample inflated — dress 7 recorded 0.708
-    * with a sub-5% spread and 400+ s of deadline left idle. More
-    * symmetric rounds are the only estimator improvement available
-    * (min-of-k converges to the uncontended machine from above), all
-    * samples stay disclosed in runs_sec, and the cap still binds — this
-    * decides how many samples to take, never which to report. */
-  private[graft] def wantMoreRounds(rounds: Int, maxRounds: Int,
-      unstable: Boolean, bestEff: Option[Double], target: Double): Boolean =
-    rounds < maxRounds && (unstable || bestEff.exists(_ < target))
-
-  /** Per-leg stats with SYMMETRIC TRUNCATION: each leg's best is the min
-    * over its first k rounds, k = the smallest sample count across the
-    * point's legs. A kill/shed mid-round must not leave one leg with an
-    * extra (possibly luckier) sample in the ratio — the r3 asymmetric-
-    * sampling bias — which is also what makes launching a speculative
-    * round 2 safe: a truncated round falls back to round-1 numbers. All
-    * samples stay disclosed in runs_sec. */
-  private[graft] def legStatsFor(m: collection.Map[Int, Vector[Run]],
-                                 legCores: Seq[Int]): Seq[LegStat] = {
-    val present = legCores.filter(c => m.get(c).exists(_.nonEmpty))
+  /** Per-leg stats with SYMMETRIC TRUNCATION: min and median over each
+    * leg's first k rounds, k = the smallest sample count across the
+    * point's legs. A kill or timeout mid-round must not leave one leg with
+    * an extra (possibly luckier) sample in the ratio — the r3
+    * asymmetric-sampling bias. All samples stay disclosed in runs_sec. */
+  private[graft] def legStatsFor(m: collection.Map[Int, Vector[Run]]): Seq[LegStat] = {
+    val present = LegCores.filter(c => m.get(c).exists(_.nonEmpty))
     val k =
       if (present.size >= 2) present.map(c => m(c).size).min else Int.MaxValue
     present.map { c =>
-      val rs = m(c)
-      val best = rs.take(k).minBy(_.sec)
-      LegStat(c, best.sec, best.triples / best.sec, best.taskSec,
-        best.gcSec, best.jitSec, rs.map(_.sec), best.warmup, best.fallback,
-        best.coldSec)
+      val counted = m(c).take(k).sortBy(_.sec)
+      val n = counted.size
+      LegStat(c, counted.head, (counted((n - 1) / 2).sec + counted(n / 2).sec) / 2,
+        m(c).map(_.sec))
     }
   }
 
   private def fmt(v: Double, dp: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${dp}f", v: java.lang.Double)
 
-  /** Parent-side warmup-mode choice for a ROUND (both legs share one
-    * mode — see runOnce) whose work is projected at `projSec`, given the
-    * seconds left before the deadline: full (~40-60 s per leg idle, up
-    * to ~250 s contended) when comfortable, short (~20 s) when thin,
-    * skip when a cold round with ~40-90 s of in-window JIT per leg
-    * beats no round at all. */
-  private[graft] def warmupMode(remainingSec: Double, projSec: Double): String =
-    if (remainingSec >= projSec + 300) "full"
-    else if (remainingSec >= projSec + 140) "short"
-    else "skip"
-
-  /** Round-level warmup choice: mandatory rounds floor at "short".
-    * "skip" only makes sense when the ~20-40 s a short warmup costs is
-    * what kills the leg — but a mandatory round runs even when its
-    * projection doesn't fit (0.75 margin), and a long leg pays the cold
-    * tax many times over: the r5 rehearsal-1 primary 1-core leg ran
-    * warmup=skip in a contended window and carried 372 s of in-window
-    * JIT + 271 s GC (868 s wall vs ~280-400 warmed). Optional rounds
-    * only launch when their projection fits with ≥140 s slack, so the
-    * floor never binds there. */
-  private[graft] def roundWarmup(remainingSec: Double, projSec: Double,
-                                 mandatory: Boolean): String = {
-    val m = warmupMode(remainingSec, projSec)
-    if (mandatory && m == "skip") "short" else m
-  }
-
-  /** Projected FORK WALL (boot + warmup + main) for the next run of
-    * (tag, cores), from measured samples of (mainSec, overheadSec):
-    *  - same (tag, cores) seen → worst sample × 1.1 (a repeat round costs
-    *    what the observed regime says it costs). With `optimistic` set —
-    *    used ONLY for the cheap fast-window EXTRA rounds — best sample ×
-    *    1.25 instead: one throttled window otherwise poisons every later
-    *    projection (dress runs 3/4/5 each left 400-630 s of deadline
-    *    UNSPENT while shedding extra_pages24k off a single 2-4× contended
-    *    sample), and the whole point of an extra round is sharpening the
-    *    per-leg min — the uncontended-machine estimate the min sample
-    *    itself is. Under-projection is recoverable by design (per-leg
-    *    margin, kill-timer, symmetric truncation, incremental emission);
-    *    over-projection loses the refinement with certainty;
-    *  - same cores on another corpus → BEST main sample × page
-    *    ratio^0.62 + worst overhead (boot + warmup is corpus-size-
-    *    independent), × 1.15. The min sample estimates the uncontended
-    *    machine — the same rationale as per-leg min-of-k — and the cost
-    *    curve is strongly SUBLINEAR in pages: per-page throughput rises
-    *    with corpus size (the distinct-mention pre-pass makes linking
-    *    work sublinear, and the fixed-KG stages amortize — BASELINE.md
-    *    r2/r4). Measured anchors: 24k→384k (16× pages) costs 3.8× at
-    *    1 core / 4.6× at 4; 384k→768k (2×) costs 1.66-1.8×. ratio^0.62
-    *    gives 5.6× and 1.54× — already above both anchors before the
-    *    margin. The r5 first rehearsal showed why the margins must stay
-    *    thin: worst-sample × 1.25 (compounded with a linear corpus-gen
-    *    model) projected ~3000 s for a primary point that fit with
-    *    ~400 s to spare, and shed it. Over-projection loses the point
-    *    with certainty; under-projection is recoverable — the mandatory
-    *    per-leg margin, the kill-timer and incremental emission turn an
-    *    overrun into a disclosed partial round, not a lost artifact.
-    *  - nothing measured → generous priors (≈ contended idle figures).
-    */
-  private[graft] def projectLeg(
-      samples: Map[(String, Int), Vector[(Double, Double)]],
-      pagesOf: Map[String, Int], tag: String, cores: Int,
-      optimistic: Boolean = false): Double = {
-    val own = samples.getOrElse((tag, cores), Vector.empty)
-    if (own.nonEmpty) {
-      if (optimistic) (own.map(_._1).min + own.map(_._2).min) * 1.25
-      else (own.map(_._1).max + own.map(_._2).max) * 1.1
-    } else {
-      val other = samples.collect {
-        case ((t, c), v) if c == cores && v.nonEmpty && pagesOf.contains(t) =>
-          (pagesOf(t), (v.map(_._1).min, v.map(_._2).max))
-      }
-      if (other.nonEmpty) {
-        val (p0, (main0, over0)) = other.maxBy(_._1)
-        val ratio = pagesOf(tag).toDouble / p0
-        (main0 * math.pow(ratio, 0.62) + over0) * 1.15
-      } else {
-        val p = pagesOf.getOrElse(tag, 384000)
-        if (cores <= 1) 0.0013 * p + 100 else 0.00055 * p + 90
-      }
-    }
-  }
-
-  /** Projected corpus-generation wall for `pages`, from a measured gen
-    * of any size in the same JVM. Generation is a 32-core Fixtures →
-    * parquet write to tmpfs whose wall is almost entirely FIXED cost
-    * (codegen/JIT + planning + task dispatch), not data: measured on
-    * this box (spark-shell, local[32], /dev/shm) — 24k pages 17.6 s
-    * cold / 4.7 s warm, 384k pages 7.8 s warm, i.e. 16× the pages costs
-    * 1.7× warm and the marginal cost is ~8.6 µs/page. The r5 first
-    * rehearsal modeled gen as LINEAR in pages (genSmallWall × 16 × 1.4
-    * ≈ 1350 s for a write that takes ~10 s warm) and that projection
-    * alone shed the primary point. Here: half the measured baseline
-    * wall (its fixed share — the JIT part is already paid) plus the
-    * measured marginal with a ~4.5× contention margin. */
-  private[graft] def projectGen(measuredGenWall: Double, pages: Int): Double =
-    measuredGenWall * 0.6 + pages * 4.0e-5 + 8.0
-
-  /** ~4 s single-vs-4-thread memcpy probe over heap arrays (>LLC-sized,
-    * so it measures DRAM bandwidth): returns (single, aggregate-of-4)
-    * GB/s. Its ratio/4 is the box's own 1→4-thread memory-fabric scaling
-    * — the hard ceiling for any shuffle/scan-heavy job's efficiency on
-    * ONE box (measured ~0.81 here; a multi-host cluster does not share
-    * memory channels). Rides the artifact as "mem_probe". */
-  private[graft] def memProbe(): (Double, Double) = {
-    val size = 64 << 20
-    def pass(nThreads: Int, runMs: Long): Double = {
-      val ready = new java.util.concurrent.CountDownLatch(nThreads)
-      val go = new java.util.concurrent.CountDownLatch(1)
-      val bytes = new java.util.concurrent.atomic.AtomicLong()
-      @volatile var stopAt = 0L
+  /** ~4 s single-vs-4-thread memcpy probe over heap arrays of `bytes`
+    * (>LLC-sized by default, so it measures DRAM bandwidth): returns
+    * (single, aggregate-of-4) GB/s. Its ratio/4 is the box's own
+    * 1→4-thread memory-fabric scaling — the hard ceiling for any
+    * shuffle/scan-heavy job's efficiency on ONE box (measured ~0.81 here;
+    * a multi-host cluster does not share memory channels). None when a
+    * probe thread fails (e.g. cannot allocate on a full heap) or is not
+    * ready within a minute: a failing thread still releases the ready
+    * latch, so the probe returns instead of blocking forever. */
+  private[graft] def memProbe(bytes: Int = 64 << 20): Option[(Double, Double)] = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    def pass(nThreads: Int, runMs: Long): Option[Double] = {
+      val ready = new CountDownLatch(nThreads)
+      val go = new CountDownLatch(1)
+      val moved = new java.util.concurrent.atomic.AtomicLong()
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      @volatile var stopAt = 0L // stays in the past if the pass fails
       val ths = (1 to nThreads).map { _ =>
         val t = new Thread(() => {
-          val src = new Array[Byte](size); val dst = new Array[Byte](size)
-          java.util.Arrays.fill(src, 1.toByte) // touch pages outside the clock
-          ready.countDown(); go.await()
-          var b = 0L
-          while (System.nanoTime() < stopAt) {
-            System.arraycopy(src, 0, dst, 0, size); b += size
-          }
-          bytes.addAndGet(b); ()
+          var counted = false
+          try {
+            val src = new Array[Byte](bytes); val dst = new Array[Byte](bytes)
+            java.util.Arrays.fill(src, 1.toByte) // touch pages outside the clock
+            ready.countDown(); counted = true; go.await()
+            var b = 0L
+            while (System.nanoTime() < stopAt) {
+              System.arraycopy(src, 0, dst, 0, bytes); b += bytes
+            }
+            moved.addAndGet(b)
+          } catch { case _: Throwable => failed.set(true) }
+          finally if (!counted) ready.countDown()
         })
         t.setDaemon(true); t.start(); t
       }
-      ready.await()
+      val ok = ready.await(60, TimeUnit.SECONDS) && !failed.get
       val t0 = System.nanoTime()
-      stopAt = t0 + runMs * 1000000L
+      if (ok) stopAt = t0 + runMs * 1000000L
       go.countDown()
-      ths.foreach(_.join())
-      bytes.get() / ((System.nanoTime() - t0) / 1e9) / 1e9
+      ths.foreach(_.join(runMs + 10000))
+      if (ok && !failed.get) Some(moved.get() / ((System.nanoTime() - t0) / 1e9) / 1e9)
+      else None
     }
-    pass(1, 300) // JIT warm, discarded
-    (pass(1, 700), pass(4, 700))
+    for {
+      _ <- pass(1, 300) // JIT warm, discarded
+      single <- pass(1, 700)
+      x4 <- pass(4, 700)
+    } yield (single, x4)
   }
 
-  /** Build the single-line artifact from the current state. Complete and
-    * valid at every call site; later calls supersede earlier ones.
-    * local1/local4 legs shown are the primary point's when it has
-    * samples (the throughput showcase), else the freshest point's; the
-    * headline efficiency is the best measured point (see object header).
-    * A two-step governor keeps the line under [[MaxLineChars]]. */
+  /** Build the single-line artifact from the current state; complete and
+    * valid at every call site, later calls supersede earlier ones. The
+    * local1/local4 legs shown are the headline point's when it has
+    * samples, else the freshest point's. A two-step governor keeps the
+    * line under [[MaxLineChars]]. */
   private[graft] def buildLine(gates: Seq[(String, Double)], sf: String,
-      points: Seq[PointStat], primaryTag: String,
-      probe: Option[(Double, Double)], gatePasses: Int,
-      elapsedSec: Double, deadlineSec: Double, shed: Seq[String]): String = {
+      points: Seq[PointStat], probe: Option[(Double, Double)],
+      gatePasses: Int, elapsedSec: Double, deadlineSec: Double,
+      shed: Seq[String]): String = {
 
     def attempt(gateDp: Int, pointDetail: Boolean): String = {
-      val total = gates.map(_._2).sum
       val qs = gates.map { case (k, v) => "\"" + k + "\":" + fmt(v, gateDp) }
         .mkString("{", ",", "}")
-      val withEff = points.filter(_.eff.isDefined)
-      val headline =
-        if (withEff.nonEmpty) Some(withEff.maxBy(_.eff.get)) else None
-      val legsPoint = points.find(p => p.tag == primaryTag && p.legs.nonEmpty)
+      val headline = points.find(_.tag == HeadlineTag).flatMap(_.eff)
+      val legsPoint = points.find(p => p.tag == HeadlineTag && p.legs.nonEmpty)
         .orElse(points.reverse.find(_.legs.nonEmpty))
-      def legJson(l: LegStat): String = {
-        val runs = l.runsSec.map(r => fmt(r, 0)).mkString("[", ",", "]")
-        val warm = if (l.warmup != "full") s""","warmup":"${l.warmup}"""" else ""
-        val fb = if (l.fallback) ""","fallback":true""" else ""
-        val cold = if (l.coldSec > 0) s""","cold_sec":${fmt(l.coldSec, 1)}""" else ""
-        s""""local${l.cores}":{"sec":${fmt(l.sec, 1)},"triples_per_sec":${fmt(l.tps, 1)},"task_sec":${fmt(l.taskSec, 1)},"gc_sec":${fmt(l.gcSec, 1)},"jit_sec":${fmt(l.jitSec, 1)},"runs_sec":$runs$warm$fb$cold}"""
-      }
+      def legJson(l: LegStat): String =
+        s""""local${l.cores}":{"min_sec":${fmt(l.best.sec, 1)},"med_sec":${fmt(l.medSec, 1)},"triples_per_sec":${fmt(l.tps, 1)},"task_sec":${fmt(l.best.taskSec, 1)},"gc_sec":${fmt(l.best.gcSec, 1)},"jit_sec":${fmt(l.best.jitSec, 1)},"runs_sec":${l.runsSec.map(r => fmt(r, 0)).mkString("[", ",", "]")}}"""
       val pts = points.filter(_.legs.nonEmpty).map { p =>
+        def legs(f: LegStat => Double, dp: Int) =
+          p.legs.map(l => fmt(f(l), dp)).mkString("[", ",", "]")
         val e = p.eff.map(v => s""""eff":${fmt(v, 3)},""").getOrElse("")
         val detail =
-          if (pointDetail) {
-            val secs = p.legs.map(l => fmt(l.sec, 1)).mkString("[", ",", "]")
-            val tasks = p.legs.map(l => fmt(l.taskSec, 0)).mkString("[", ",", "]")
-            s""","sec":$secs,"task_sec":$tasks"""
-          } else ""
+          if (pointDetail)
+            s""","min_sec":${legs(_.best.sec, 1)},"med_sec":${legs(_.medSec, 1)},""" +
+              s""""task_sec":${legs(_.best.taskSec, 0)}"""
+          else ""
         s""""${p.tag}":{$e"pages":${p.pages}$detail}"""
       }.mkString("{", ",", "}")
       val pagesShown = legsPoint.map(_.pages).getOrElse(0)
-      val pipeFields: Seq[String] = Seq(
-        Some(s""""pages":$pagesShown"""),
-        Some(s""""entities":${entitiesFor(pagesShown)}"""),
-        legsPoint.map(_.legs.map(legJson).mkString(",")).filter(_.nonEmpty),
-        headline.map(h =>
-          s""""scaling_efficiency":${fmt(h.eff.get, 3)},"scaling_source":"${h.tag}""""),
-        Some(s""""points":$pts"""),
+      val pipeFields: Seq[String] =
+        Seq(s""""pages":$pagesShown""", s""""entities":${entitiesFor(pagesShown)}""") ++
+        legsPoint.toSeq.flatMap(_.legs.map(legJson)) ++
+        headline.map(h => s""""scaling_efficiency":${fmt(h, 3)}""") ++
+        Seq(s""""scaling_source":"$HeadlineTag"""", s""""points":$pts""") ++
         probe.map { case (a, b) =>
           s""""mem_probe":{"single_gbps":${fmt(a, 2)},"x4_gbps":${fmt(b, 2)},"scaling":${fmt(b / a / 4, 3)}}"""
-        },
-        Some(s""""gate_passes":$gatePasses"""),
-        Some(s""""elapsed_sec":${elapsedSec.toInt}"""),
-        Some(s""""deadline_sec":${deadlineSec.toInt}"""),
-        // distinct: the same unit can be shed at two decision points (e.g.
-        // the fast-window round 2 at the pre-primary bank AND in the
-        // optional queue) — one tag per lost unit, not one per decision
-        Some(s""""shed":${shed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")}""")
-      ).flatten
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","queries":$qs,"sf":"$sf","pipeline":{${pipeFields.mkString(",")}}}"""
+        } ++
+        Seq(s""""gate_passes":$gatePasses""", s""""elapsed_sec":${elapsedSec.toInt}""",
+          s""""deadline_sec":${deadlineSec.toInt}""",
+          s""""shed":${shed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")}""")
+      s"""{"metric":"total","value":${fmt(gates.map(_._2).sum, 2)},"unit":"sec","queries":$qs,"sf":"$sf","pipeline":{${pipeFields.mkString(",")}}}"""
     }
 
-    val full = attempt(2, pointDetail = true)
-    if (full.length <= MaxLineChars) full
-    else {
-      val slim = attempt(2, pointDetail = false)
-      if (slim.length <= MaxLineChars) slim else attempt(1, pointDetail = false)
-    }
+    Iterator((2, true), (2, false)).map { case (dp, detail) => attempt(dp, detail) }
+      .find(_.length <= MaxLineChars).getOrElse(attempt(1, pointDetail = false))
   }
-
-  private def gateSession(cpus: Int, localDir: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-gates-$cpus")
-      .config("spark.local.dir", localDir) // RAM-backed (BenchLeg.scratchRoot)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // split sizing: the bench corpus is a few hundred MB — default 128MB
-      // splits would run scans with 1-3 tasks regardless of cores
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** JDK17 module opens Spark needs outside spark-submit — passed to the
-    * forked leg JVMs (mirrors build.sbt's jdk17AddOpens). */
-  private val Jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** The `n` least-loaded CPU ids over a 250 ms /proc/stat window, ties
     * broken randomly (on an idle box every core ties — a fixed tiebreak
@@ -448,93 +239,63 @@ object Bench {
     }
   }
 
-  private def jNum(line: String, key: String): Option[Double] =
-    (s""""$key":(-?[0-9.]+)""").r.findFirstMatchIn(line).map(_.group(1).toDouble)
-  private def jStr(line: String, key: String): Option[String] =
-    (s""""$key":"([^"]*)"""").r.findFirstMatchIn(line).map(_.group(1))
-
-  /** Fork one pinned leg JVM. Leg stdout goes to a scratch file (read
-    * after exit — no pipe to deadlock on while we enforce the
-    * kill-timer); stderr is inherited for live diagnostics. */
-  private def forkLeg(pagesPath: String, dumpPath: String, workDir: String,
-                      cores: Int, warmup: String, passes: Int,
-                      killAfterSec: Double): LegOutcome = {
-    val javaHome = System.getProperty("java.home")
-    val cp = System.getProperty("java.class.path")
-    if (cp == null || !cp.contains("classes")) return LegInfraFail
-    val heap = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
+  /** Fork one pinned leg JVM (`taskset` to the `cores` least-loaded CPUs,
+    * `-XX:ActiveProcessorCount=cores`) on the corpus under `corpus`.
+    * Returns the leg's sample, if it printed one, and the tag prefix of an
+    * abnormal end. The leg gets this JVM's own `--add-opens` flags
+    * (build.sbt's list when run from sbt). Leg stdout goes to a scratch
+    * file read after exit — no pipe to deadlock on while we enforce the
+    * kill-timer; stderr is inherited. */
+  private def forkLeg(corpus: String, workDir: String, cores: Int,
+                      killAfterSec: Double): (Option[Run], Option[String]) = {
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).filter(_.startsWith("--add-opens"))
     val cpuSet = idleCpus(cores).mkString(",")
-    System.err.println(
-      s"[bench] leg cores=$cores pinned to cpus {$cpuSet} warmup=$warmup " +
-        f"killAfter=${killAfterSec}%.0fs")
+    System.err.println(s"[bench] leg cores=$cores pinned to cpus {$cpuSet} " +
+      f"killAfter=${killAfterSec}%.0fs")
     val outFile = new java.io.File(s"$workDir-stdout.txt")
     outFile.getParentFile.mkdirs()
-    val cmd: Seq[String] =
-      Seq("taskset", "-c", cpuSet, s"$javaHome/bin/java",
-        s"-XX:ActiveProcessorCount=$cores", s"-Xmx$heap",
-        // stock JDK17 collector (G1), deliberately untouched: collector
-        // choice shifts work between mutator and GC threads differently
-        // at different core counts, so any non-default pick would need a
-        // per-leg fairness argument — the default needs none
-        // per-run shuffle/spill dir inside workDir: RAM-backed and deleted
-        // with the rest of the run's scratch by runOnce
-        s"-Dspark.local.dir=$workDir/_sparklocal",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-      Jdk17AddOpens ++ Seq("-cp", cp, "graft.BenchLeg",
-        pagesPath, dumpPath, workDir, cores.toString)
+    val cmd = Seq("taskset", "-c", cpuSet,
+      s"${System.getProperty("java.home")}/bin/java",
+      // stock JDK17 collector (G1), deliberately untouched: collector
+      // choice shifts work between mutator and GC threads differently
+      // at different core counts, so any non-default pick would need a
+      // per-leg fairness argument — the default needs none
+      s"-XX:ActiveProcessorCount=$cores",
+      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}") ++ addOpens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.BenchLeg",
+        s"$corpus/pages", s"$corpus/dump", workDir, cores.toString)
     try {
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_LEG_WARMUP", warmup)
-      pb.environment().put("SPARK_GRAFT_LEG_PASSES", passes.toString)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      pb.redirectOutput(outFile)
-      val proc = pb.start()
-      val finished = proc.waitFor(math.max(60L, killAfterSec.toLong),
-        java.util.concurrent.TimeUnit.SECONDS)
-      if (!finished) {
-        System.err.println(s"[bench] leg cores=$cores overran its " +
-          f"kill-timer (${killAfterSec}%.0fs) — killing the leg and shedding it")
+      val proc = new ProcessBuilder(cmd: _*)
+        .redirectError(ProcessBuilder.Redirect.INHERIT).redirectOutput(outFile).start()
+      if (!proc.waitFor(killAfterSec.toLong, java.util.concurrent.TimeUnit.SECONDS)) {
+        System.err.println(s"[bench] leg cores=$cores overran its kill-timer")
         proc.destroyForcibly()
         proc.waitFor(15, java.util.concurrent.TimeUnit.SECONDS)
-        return LegTimedOut
+        return (None, Some("timeout"))
       }
       val rc = proc.exitValue()
-      val out =
-        try new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-        catch { case _: Exception => "" }
-      val line = out.linesIterator.toSeq.reverse.find(_.startsWith("{\"cores\""))
-      val parsedRun: Option[Run] = line.flatMap { l =>
-        (jNum(l, "sec"), jNum(l, "triples")) match {
-          case (Some(sec), Some(tr)) =>
-            Some(Run(tr.toLong, sec,
-              jNum(l, "task_sec").getOrElse(0.0),
-              jNum(l, "gc_sec").getOrElse(0.0),
-              jNum(l, "jit_sec").getOrElse(0.0),
-              jStr(l, "warmup").getOrElse("full"),
-              fallback = false, overheadSec = 0.0,
-              coldSec = jNum(l, "cold_sec").getOrElse(0.0)))
-          case _ => None
-        }
+      val out = new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
+      val run = out.linesIterator.toSeq.reverse.find(_.startsWith("{\"cores\"")).map { l =>
+        val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(l)
+        Run(j.get("triples").asLong, j.get("sec").asDouble, j.get("task_sec").asDouble,
+          j.get("gc_sec").asDouble, j.get("jit_sec").asDouble)
       }
       if (rc == 143 || rc == 137 || rc == 124) {
         // kill signal (SIGTERM/SIGKILL/timeout): the driver's deadline is
-        // tearing the process tree down — do NOT substitute an unpinned
-        // in-process leg (r4's mistake). A contract line that already
+        // tearing the process tree down. A contract line that already
         // printed means the kill landed in the leg's spark.stop() teardown,
         // AFTER the measurement completed: that sample is valid — keep it.
-        System.err.println(s"[bench] forked leg cores=$cores killed (rc=$rc)" +
-          (if (parsedRun.nonEmpty) " after completing its measurement" else ""))
-        return LegKilled(parsedRun)
-      }
-      if (rc != 0 || line.isEmpty) {
+        System.err.println(s"[bench] forked leg cores=$cores killed (rc=$rc)")
+        (run, Some("killed"))
+      } else if (rc != 0 || run.isEmpty) {
         System.err.println(s"[bench] forked leg cores=$cores rc=$rc; out=$out")
-        return LegInfraFail
-      }
-      parsedRun.map(LegOk(_)).getOrElse(LegInfraFail)
+        (None, Some("failed"))
+      } else (run, None)
     } catch {
       case e: Exception =>
-        System.err.println(s"[bench] fork failed (${e.getMessage})")
-        LegInfraFail
+        System.err.println(s"[bench] fork failed ($e)")
+        (None, Some("failed"))
     }
   }
 
@@ -542,70 +303,33 @@ object Bench {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    // all-inclusive wall budget from main() entry: the r3 driver run
-    // completed (uncapped) at 1898 s of sbt time and r4 was killed by the
-    // driver's outer timeout, so the default stays inside ~1800 s total
-    // after sbt boot; everything the bench does is charged against it
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE", "1680").toDouble
     def remaining: Double = deadlineSec - elapsed
-    val reserve = 25.0 // final emit + scratch delete + JVM teardown
-
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // 384k pages: large enough that the corpus-linear work (extract,
-    // detect, link, triples) dominates the parallelism-independent floor
-    // (driver latency, vocabulary-scale joins, stage commits)
-    val nPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "384000").toInt
-    // 24k pages: the fast-window point — cheap enough that a scaling
-    // number lands in the artifact within minutes even contended (0 = off)
-    val smallPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_SMALL_PAGES", "24000").toInt
-    val maxRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "6").toInt
-    // effective values: 1 (single pass) or 2 (min-of-2). The r5 flow is
-    // pass 1 + at most one more pass (immediate or deferred) — values >2
-    // are treated as 2, unlike the pre-r5 harness's unbudgeted loop
-    val gatePassesWanted = sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_PASSES", "2").toInt
-    val want2x = sys.env.getOrElse("SPARK_GRAFT_BENCH_2X", "1") != "0"
-    val stableSpread =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_STABLE_SPREAD", "0.05").toDouble
-    // north-rule gate: fast-window extras keep sampling below this even
-    // when the spread looks stable (see wantMoreRounds)
-    val effTarget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_EFF_TARGET", "0.8").toDouble
-    val legCores = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORES", "1,4")
-      .split(",").map(_.trim.toInt).toSeq
-
-    val smallTag = s"pages${smallPages / 1000}k"
-    val primaryTag = s"pages${nPages / 1000}k"
-    val x2Tag = s"pages${nPages * 2 / 1000}k"
-    val tagPages = Map(smallTag -> smallPages, primaryTag -> nPages,
-      x2Tag -> nPages * 2)
 
     BenchLeg.sweepStaleScratch()
     val benchRoot =
       s"${BenchLeg.scratchRoot}/graft-bench-${ProcessHandle.current().pid()}"
-    def deleteBenchRoot(): Unit =
-      try scala.reflect.io.Directory(new java.io.File(benchRoot)).deleteRecursively()
+    def deleteDir(d: String): Unit =
+      try scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
       catch { case _: Exception => () }
 
-    // ---- mutable bench state (read by emit + the shutdown hook) ----
+    // ---- bench state (read by emit and the shutdown hook) ----
     val gateMins = scala.collection.mutable.Map[String, Double]()
     var gatePassesDone = 0
-    val points = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.LinkedHashMap[Int, Vector[Run]]]()
-    val forkSamples = // (tag, cores) -> (mainSec, overheadSec) per run
-      scala.collection.mutable.Map[(String, Int), Vector[(Double, Double)]]()
+    val samples = scala.collection.mutable.LinkedHashMap[String, Map[Int, Vector[Run]]]()
     var probe: Option[(Double, Double)] = None
     var shed = Vector.empty[String]
     @volatile var stopAll = false
     @volatile var lastLine = ""
 
-    def pointStats: Seq[PointStat] = points.toSeq.map { case (tag, m) =>
-      PointStat(tag, tagPages(tag), legStatsFor(m, legCores))
-    }
-    def bestEff: Option[Double] = pointStats.flatMap(_.eff).maxOption
     def emit(): Unit = synchronized {
-      lastLine = buildLine(gateMins.toSeq.sortBy(_._1), sfDir, pointStats,
-        primaryTag, probe, gatePassesDone, elapsed, deadlineSec, shed)
+      val points = samples.toSeq.map { case (tag, m) =>
+        PointStat(tag, pagesOf(tag), legStatsFor(m))
+      }
+      lastLine = buildLine(gateMins.toSeq.sortBy(_._1), sfDir, points,
+        probe, gatePassesDone, elapsed, deadlineSec, shed)
       println(lastLine)
       System.out.flush()
     }
@@ -614,331 +338,97 @@ object Bench {
     // noise (stack traces, logs) followed the last in-band emission
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       if (lastLine.nonEmpty) { println(lastLine); System.out.flush() }
-      deleteBenchRoot()
+      deleteDir(benchRoot)
     }))
 
-    def projFork(tag: String, cores: Int, optimistic: Boolean = false): Double =
-      projectLeg(forkSamples.toMap, tagPages, tag, cores, optimistic)
-    def projRound(tag: String, optimistic: Boolean = false): Double =
-      legCores.map(c => projFork(tag, c, optimistic)).sum
-    def fits(projSec: Double): Boolean = remaining - reserve > projSec
-    def unstable(tag: String): Boolean =
-      points.get(tag).exists(m => legCores.exists { c =>
-        val rs = m.getOrElse(c, Vector.empty).map(_.sec)
-        rs.nonEmpty && rs.max / rs.min - 1.0 > stableSpread
-      })
+    /** Start `unit` only if nothing stopped the bench and the deadline has
+      * room; otherwise name it in the shed list. */
+    def startUnit(unit: String): Boolean = {
+      val ok = !stopAll && remaining - ReserveSec > MinUnitSec
+      if (!ok) { shed :+= unit; emit() }
+      ok
+    }
 
-    var runIdx = 0
-    /** One pinned leg; records the sample, emits, returns false when the
-      * bench should stop (killed) — shedding is signalled via `shed`.
-      * `wm` is the round's warmup mode, chosen ONCE per round: per-leg
-      * modes could put the 1-core leg's JIT inside the window while the
-      * 4-core leg's stays out, biasing the ratio within a round. */
-    def runOnce(tag: String, cores: Int, pp: String, dp: String,
-                mandatory: Boolean, wm: String,
-                optimistic: Boolean = false): Unit = {
-      if (stopAll) return
-      // the optimistic flag carries into the per-leg margin too: an extra
-      // round admitted on best-sample projections must not have its legs
-      // re-shed by the worst-sample rule one call deeper
-      val proj = projFork(tag, cores, optimistic)
-      val margin = if (mandatory) proj * 0.75 else proj
-      if (remaining - reserve < margin) {
-        shed :+= s"leg_${tag}_c$cores"
-        System.err.println(f"[bench] shedding $tag cores=$cores " +
-          f"(proj=${proj}%.0fs, remaining=${remaining}%.0fs)")
-        emit()
-        return
-      }
+    def runOnce(tag: String, round: Int, cores: Int, corpus: String): Unit = {
       try { new ProcessBuilder("sync").inheritIO().start().waitFor() }
       catch { case _: Exception => }
-      runIdx += 1
-      val work = s"$benchRoot/work-$tag-$cores-$runIdx"
-      val killAfter = math.min(remaining + 60, math.max(proj * 3, 600))
-      // in-JVM passes stay at 1 by default: a second "warm" pass was
-      // measured and does NOT remove the in-window JIT — Spark generates
-      // fresh whole-stage-codegen classes every run, so each pass re-JITs
-      // them from scratch (24k 1-core: pass 1 94.3 s / 83.9 s jit, pass 2
-      // 110.5 s / 80.9 s jit + 3× the GC from pass-1 checkpoint blocks).
-      // The per-run JIT is an irreducible per-run cost, identical at both
-      // core counts' windows, and fresh-JVM min-of-k stays the protocol;
-      // the env override remains for leg diagnostics (cold_sec disclosed).
-      // both names honored: BENCH_LEG_PASSES (parent-level) wins, else the
-      // leg-level name BenchLeg's own header documents — previously the
-      // latter was silently overwritten in the child env with the default
-      val passes = math.max(1,
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_LEG_PASSES",
-          sys.env.getOrElse("SPARK_GRAFT_LEG_PASSES", "1")).toInt)
-      val (outcome, forkWall) =
-        timed(forkLeg(pp, dp, work, cores, wm, passes, killAfter))
-      val run = outcome match {
-        case LegOk(r) => Some(r.copy(overheadSec = math.max(0.0, forkWall - r.sec)))
-        case LegKilled(r) =>
-          // self-describing truncation: without the tag the artifact shows
-          // a one-legged point and an empty shed list (r5 rehearsal 1). A
-          // measurement the leg completed before dying in teardown is kept
-          // — the kill only stops FURTHER work.
-          shed :+= s"killed_${tag}_c$cores"
-          stopAll = true
-          r.map(x => x.copy(overheadSec = math.max(0.0, forkWall - x.sec)))
-        case LegTimedOut =>
-          // OUR kill-timer, not external teardown: this leg is too slow
-          // for its budget in the current regime — shed the sample but
-          // keep benching (the gate suite and other points fit their own
-          // projections, and every later unit re-checks the deadline).
-          // Stopping everything here would trade e.g. the whole gate
-          // suite for one pathological leg.
-          shed :+= s"timeout_${tag}_c$cores"
-          None
-        case LegInfraFail =>
-          val live = org.apache.spark.sql.SparkSession.getDefaultSession
-            .exists(s => !s.sparkContext.isStopped)
-          if (live) {
-            // only one SparkContext exists per JVM: pipelineSession's
-            // getOrCreate would RETURN the live 32-core gates session
-            // (master/configs ignored), mislabel the unpinned sample as
-            // cores=N, and s.stop() would kill the gate suite under it —
-            // an in-process leg is impossible while that session is up
-            System.err.println(s"[bench] cannot run cores=$cores " +
-              "in-process while another SparkSession is active — shedding")
-            shed :+= s"infra_${tag}_c$cores"
-            None
-          } else {
-            // genuine can't-fork environment: unpinned in-process fallback,
-            // loudly tagged — it free-rides the full machine for GC/JIT
-            System.err.println(s"[bench] running cores=$cores IN-PROCESS " +
-              "(unpinned fallback — tagged in the artifact)")
-            if (passes > 1)
-              System.err.println("[bench] in-process fallback runs a single " +
-                s"pass — the $passes-pass diagnostic is fork-only")
-            try {
-              val s = BenchLeg.pipelineSession(cores)
-              val (tr, sec) = BenchLeg.runLeg(s, pp, dp, work)
-              s.stop()
-              Some(Run(tr, sec, 0, 0, 0, "inproc", fallback = true,
-                overheadSec = 0.0))
-            } catch {
-              case e: Exception =>
-                System.err.println(s"[bench] in-process fallback failed: $e")
-                None
-            }
-          }
+      val work = s"$benchRoot/work-$tag-r$round-c$cores"
+      val (run, end) = forkLeg(corpus, work, cores, remaining - ReserveSec)
+      // a kill or our own timeout stops all further work; a failed leg
+      // only costs its own sample
+      end.foreach { t => shed :+= s"${t}_${tag}_c$cores"; stopAll ||= t != "failed" }
+      run.foreach { r =>
+        val m = samples.getOrElse(tag, Map.empty[Int, Vector[Run]])
+        samples(tag) = m.updated(cores, m.getOrElse(cores, Vector.empty) :+ r)
       }
       // stage outputs are per-leg scratch; drop them so repeats can't
       // resume from markers and multi-leg runs don't fill the tmpfs
-      try scala.reflect.io.Directory(new java.io.File(work)).deleteRecursively()
-      catch { case _: Exception => () }
-      run.foreach { r =>
-        val m = points.getOrElseUpdate(tag,
-          scala.collection.mutable.LinkedHashMap[Int, Vector[Run]]())
-        m(cores) = m.getOrElse(cores, Vector.empty) :+ r
-        forkSamples((tag, cores)) =
-          forkSamples.getOrElse((tag, cores), Vector.empty) :+
-            ((r.sec, r.overheadSec))
-      }
+      deleteDir(work)
       emit()
     }
-    def oneRound(tag: String, pp: String, dp: String, mandatory: Boolean,
-                 optimistic: Boolean = false): Unit = {
-      val wm = roundWarmup(remaining - reserve, projRound(tag, optimistic), mandatory)
-      legCores.foreach(c => runOnce(tag, c, pp, dp, mandatory, wm, optimistic))
-    }
-    /** Rounds are SYMMETRIC: a repeat round runs only when the WHOLE
-      * round fits the remaining deadline — repeating one leg but not the
-      * other would bias the per-leg-min ratio exactly the way the r3
-      * one-shot rule did (the judge's r3/r4 finding). Round 1 of a point
-      * is mandatory (per-leg margin checks still apply). `margin` < 1
-      * lets a high-value round (the primary point's round 2) launch
-      * speculatively: symmetric truncation in pointStats makes a
-      * truncated round harmless to the ratio. */
-    def gatedRound(tag: String, pp: String, dp: String, label: String,
-                   margin: Double = 1.0, optimistic: Boolean = false): Boolean =
-      if (stopAll) false
-      else if (fits(projRound(tag, optimistic) * margin)) {
-        oneRound(tag, pp, dp, mandatory = false, optimistic); true
-      } else {
-        shed :+= s"${label}_$tag"; emit(); false
+    /** Symmetric interleaved rounds: every leg of round i runs before any
+      * leg of round i+1. A leg left with too little deadline times out. */
+    def rounds(tag: String, k: Int, corpus: String): Unit =
+      (1 to k).foreach { i =>
+        if (startUnit(s"round${i}_$tag"))
+          LegCores.foreach(c => if (!stopAll) runOnce(tag, i, c, corpus))
       }
-    def roundsRun(tag: String): Int =
-      points.get(tag)
-        .map(m => m.values.map(_.size).maxOption.getOrElse(0)).getOrElse(0)
 
-    def genCorpus(s: SparkSession, pages: Int, root: String): (String, String) = {
-      val pagesPath = s"$root/pages"
-      val dumpPath = s"$root/dump"
+    def genCorpus(s: SparkSession, tag: String): String = {
+      val root = s"$benchRoot/corpus-$tag"
+      val pages = pagesOf(tag)
       graft.kg.Fixtures.pages(s, pages, entitiesFor(pages))
-        .write.mode("overwrite").parquet(pagesPath)
+        .write.mode("overwrite").parquet(s"$root/pages")
       graft.kg.Fixtures.dumpLines(s, entitiesFor(pages))
-        .write.mode("overwrite").parquet(dumpPath)
-      (pagesPath, dumpPath)
+        .write.mode("overwrite").parquet(s"$root/dump")
+      root
     }
 
-    /** One pass over the gate queries at local[cpus] on the sf dir,
-      * folding per-query minima into gateMins; bails out of the pass
-      * (recording what ran) when the deadline closes in, and emits after
-      * every query so a kill mid-pass still leaves the partial timings in
-      * the artifact (gate_passes stays 0 until a pass completes — a
-      * nonzero value with gate_passes:0 reads as "partial pass").
-      * Returns (completed, passWall). */
-    def gatePass(spark: SparkSession): (Boolean, Double) = timed {
-      val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      var complete = true
-      names.foreach { case (name, fn) =>
-        if (stopAll || remaining < reserve + 10) complete = false
-        else {
-          val (_, sec) = timed {
-            try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-          }
+    /** One pass over the gate queries on the sf dir, folding per-query
+      * minima into gateMins and emitting after every query, so a kill
+      * mid-pass still leaves partial timings (gate_passes counts completed
+      * passes only). Returns whether the pass completed in the deadline. */
+    def gatePass(spark: SparkSession): Boolean =
+      SparkEntry.queries.toSeq.sortBy(_._1).forall { case (name, fn) =>
+        val room = !stopAll && remaining > ReserveSec + 10
+        if (room) {
+          val q0 = System.nanoTime()
+          try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+          val sec = (System.nanoTime() - q0) / 1e9
           gateMins(name) = math.min(gateMins.getOrElse(name, Double.MaxValue), sec)
           emit()
         }
+        room
       }
-      complete
-    }
 
     try {
-      // ---- 0. memory-fabric probe (regime context, ~4 s) ----
-      probe = try Some(memProbe()) catch { case _: Exception => None }
+      probe = memProbe()
       emit()
-
-      // ---- 1. session + fast-window corpus + round 1 (round 2 is
-      //      optional work: the early number matters more than its
-      //      refinement, and the budget it frees is what lets the
-      //      primary point run TWO mandatory-priority rounds) ----
-      val spark = gateSession(cpus, s"$benchRoot/gates-local")
-      var genSmallWall = 0.0
-      var smallPaths: Option[(String, String)] = None
-      if (smallPages > 0 && !stopAll) {
-        val (paths, w) = timed(genCorpus(spark, smallPages, s"$benchRoot/cs"))
-        smallPaths = Some(paths); genSmallWall = w
-        val (pp, dp) = paths
-        oneRound(smallTag, pp, dp, mandatory = true)
+      // gates + corpus session, shuffle/spill on BenchLeg.scratchRoot
+      val spark = Sessions.local(cpus, 32, Some(s"$benchRoot/gates-local"))
+      if (startUnit(s"point_$HeadlineTag")) {
+        val corpus = genCorpus(spark, HeadlineTag)
+        rounds(HeadlineTag, HeadlineRounds, corpus)
+        deleteDir(corpus) // the tmpfs holds one corpus at a time
       }
-
-      // ---- 2. gate queries: pass 1 always; pass 2 immediately only if
-      //      pass 1 ran uncontended (else deferred behind the primary
-      //      point — min-of-2 removes the co-tenant noise floor that made
-      //      two r3 single-sample timings 10× their idle truth) ----
-      var deferredPass2 = false
-      var pass1Wall = 0.0
-      if (!sys.env.contains("SPARK_GRAFT_BENCH_SKIP_GATES") && !stopAll) {
-        val (complete1, w1) = gatePass(spark)
-        pass1Wall = w1
-        // documented contract (gatePass): gate_passes stays 0 until a pass
-        // COMPLETES — a nonzero value with gate_passes:0 reads as partial
-        gatePassesDone = if (complete1) 1 else 0
-        if (!complete1) shed :+= "gates_partial"
-        emit()
-        if (gatePassesWanted > 1 && complete1) {
-          if (w1 <= 150 && fits(w1 * 1.3)) {
-            val (c2, _) = gatePass(spark)
-            if (c2) gatePassesDone = 2 else shed :+= "gates_partial"
-            emit()
-          } else deferredPass2 = true
+      var passOk = true
+      (1 to GatePasses).foreach { i =>
+        if (passOk && startUnit(s"gates_pass$i")) {
+          passOk = gatePass(spark)
+          if (passOk) gatePassesDone = i else shed :+= "gates_partial"
+          emit()
         }
       }
-
-      // ---- 2b. bank a min-of-2 fast window BEFORE the primary point
-      //      when the budget says the primary's own refinement round
-      //      will be shed anyway (round1 + 0.8×round2 ≈ ×1.8): in that
-      //      regime the fast window is the artifact's likely headline
-      //      source and a single-shot ratio is exactly the r3 bias the
-      //      judge flagged — r5 rehearsal 1 recorded eff from ONE fast
-      //      round because the doomed primary gamble consumed the tail.
-      //      In comfortable regimes this is skipped and the fast round 2
-      //      keeps its place in the optional queue below. ----
-      smallPaths.foreach { case (pp, dp) =>
-        if (!stopAll && roundsRun(smallTag) < 2 && nPages > 0 &&
-            !fits(projRound(primaryTag) * 1.8))
-          gatedRound(smallTag, pp, dp, "round2")
-      }
-
-      // ---- 3. primary corpus + 2 interleaved rounds (round 2 at a 0.8
-      //      projection margin — see gatedRound; the gen itself is gated
-      //      on the calibrated projection so a hopeless regime doesn't
-      //      waste the write, and the pair is gated together so we never
-      //      burn a long 1-core leg whose 4-core partner can't follow) ----
-      var primaryPaths: Option[(String, String)] = None
-      var genPrimaryWall = 0.0
-      if (nPages > 0 && !stopAll) {
-        val genProj =
-          if (smallPages > 0) projectGen(genSmallWall, nPages) else 60.0
-        if (fits(genProj + projRound(primaryTag) * 0.8)) {
-          val (paths, w) = timed(genCorpus(spark, nPages, s"$benchRoot/cp"))
-          primaryPaths = Some(paths); genPrimaryWall = w
-        } else { shed :+= s"point_$primaryTag"; emit() }
-      }
+      val primary =
+        if (startUnit(s"point_$PrimaryTag")) Some(genCorpus(spark, PrimaryTag)) else None
       spark.stop()
-      primaryPaths.foreach { case (pp, dp) =>
-        oneRound(primaryTag, pp, dp, mandatory = true)
-        gatedRound(primaryTag, pp, dp, "round2", margin = 0.8)
-      }
-
-      // ---- 4. optional work, keep-priority order (what doesn't fit is
-      //      shed and recorded): deferred gate pass 2 → fast-window
-      //      round 2 → 2× corpus point → spread-gated extra primary
-      //      rounds → extra fast-window rounds. Pass-2 minima, the
-      //      fast-window min-of-2 and the 2× point are evidence that
-      //      otherwise doesn't exist; extra rounds only refine numbers
-      //      that do, so they shed first — and the primary point's
-      //      refinement outranks the fast window's ----
-      if (deferredPass2 && !stopAll) {
-        if (fits(pass1Wall * 1.3 + 20)) {
-          val s2 = gateSession(cpus, s"$benchRoot/gates-local2")
-          val (c2, _) = gatePass(s2)
-          s2.stop()
-          if (c2) gatePassesDone = 2 else shed :+= "gates_partial"
-          emit()
-        } else { shed :+= "gates_pass2"; emit() }
-      }
-
-      smallPaths.foreach { case (pp, dp) =>
-        if (!stopAll && roundsRun(smallTag) < 2)
-          gatedRound(smallTag, pp, dp, "round2")
-      }
-
-      if (want2x && primaryPaths.isDefined && !stopAll) {
-        val genProj2 = projectGen(genPrimaryWall, nPages * 2)
-        if (fits(genProj2 + projRound(x2Tag))) {
-          val s2 = gateSession(cpus, s"$benchRoot/gates-local3")
-          val (paths2, _) = timed(genCorpus(s2, nPages * 2, s"$benchRoot/c2"))
-          s2.stop()
-          oneRound(x2Tag, paths2._1, paths2._2, mandatory = false)
-        } else { shed :+= s"point_$x2Tag"; emit() }
-      }
-
-      primaryPaths.foreach { case (pp, dp) =>
-        // spread-gated only (bestEff=None): chasing the gate here would
-        // burn 400+ s rounds against the documented single-box fabric
-        // ceiling at 384k; the fast window below is the headline source
-        var cont = true
-        while (cont && !stopAll &&
-               wantMoreRounds(roundsRun(primaryTag), maxRounds,
-                 unstable(primaryTag), None, effTarget))
-          cont = gatedRound(primaryTag, pp, dp, "extra")
-      }
-      smallPaths.foreach { case (pp, dp) =>
-        // optimistic projections HERE only: these rounds exist to sharpen
-        // the fast window's per-leg min — the artifact's likely headline —
-        // and the deadline tail they spend was measured going idle in
-        // dress runs 3/4/5 (400-630 s unspent each) whenever one throttled
-        // sample inflated the worst-sample projection 2-4×
-        // cap honors the same SPARK_GRAFT_BENCH_REPEATS knob as the
-        // primary-extras loop above (the fast window previously hardcoded 6);
-        // below-target headline keeps sampling even at a stable spread
-        // (dress 7: uniformly-throttled pair, 0.708, sub-5% spread)
-        var cont = true
-        while (cont && !stopAll &&
-               wantMoreRounds(roundsRun(smallTag), maxRounds,
-                 unstable(smallTag), bestEff, effTarget))
-          cont = gatedRound(smallTag, pp, dp, "extra", optimistic = true)
-      }
+      primary.foreach(rounds(PrimaryTag, PrimaryRounds, _))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] aborting on error: $e")
         e.printStackTrace()
     } finally {
-      deleteBenchRoot()
+      deleteDir(benchRoot)
       emit()
     }
   }

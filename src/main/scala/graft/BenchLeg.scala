@@ -17,29 +17,31 @@ import org.apache.spark.sql.SparkSession
   *    runs later (the r2 driver run's local[4] leg was 2× the same
   *    config in a fresh JVM).
   *
-  * args: pagesPath dumpPath workDir cores. env SPARK_GRAFT_LEG_WARMUP
-  * (full|short|skip, set by the parent from its remaining deadline)
-  * sizes the JIT warmup; SPARK_GRAFT_LEG_PASSES (default 1) runs the
-  * measured job that many times in THIS JVM and reports the fastest
-  * pass. Multi-pass is a DIAGNOSTIC, not the protocol: a second pass
-  * was measured NOT to run warm — Spark generates fresh whole-stage-
-  * codegen classes every run, so each pass re-JITs them from scratch
-  * (24k 1-core: pass 1 94.3 s wall / 83.9 s jit, pass 2 110.5 s /
-  * 80.9 s jit with 3× the GC from pass-1 localCheckpoint blocks). The
-  * ~50-110 s of in-window compiler time per pipeline run is an
-  * irreducible per-run cost at both core counts, not cold-JVM residue.
-  * Prints ONE JSON contract line parsed by Bench:
+  * args: pagesPath dumpPath workDir cores. Every leg runs the same full
+  * warmup and JIT settle, then ONE measured run: a second in-JVM pass
+  * was measured not to run warm (Spark generates fresh whole-stage-codegen
+  * classes every run, so each pass re-JITs them: 24k 1-core pass 1
+  * 94.3 s / 83.9 s jit, pass 2 110.5 s / 80.9 s jit), so fresh-JVM
+  * rounds are the samples. Prints ONE JSON contract line parsed by Bench:
   * {"cores":N,"sec":S,"triples":T,"task_sec":A,"gc_sec":G,"jit_sec":J,
-  *  "warmup":"full|short|skip","warmup_sec":W[,"cold_sec":C]}
-  * (warmup_sec includes the post-warmup JIT-settle idle — see settleJit;
-  * cold_sec, present when passes>1, discloses the cold pass-1 wall)
+  *  "warmup_sec":W}
   * where sec (wall for Pipeline.run + triples count, after the session
   * is up — cluster-size comparisons should not include JVM/session
   * boot) is the measurement and the rest is regime evidence: task_sec
   * near-parity across legs shows the job does the same work at both
-  * cluster sizes, gc/jit attribute any wall residue.
+  * cluster sizes (a residual wall-ratio gap is then shared single-box
+  * memory bandwidth, not poor parallelism), gc/jit attribute any wall
+  * residue; warmup_sec includes the JIT settle.
   */
 object BenchLeg {
+
+  /** Shuffle partitions: 4× the high leg's cores and the SAME at both
+    * core counts. A cluster job's shuffle.partitions is a job property,
+    * not a cluster-size property (Spark's own default is a static 200);
+    * per-leg counts would make the two legs run different task layouts —
+    * the N-core leg must execute the SAME job with less parallelism, not
+    * a cheaper job. */
+  private val ShufflePartitions = 16
 
   /** RAM-backed scratch root for bench corpora, stage workdirs and Spark
     * local dirs (shuffle files, spills, localCheckpoint disk tier).
@@ -54,14 +56,14 @@ object BenchLeg {
     * 117 s on tmpfs, with task-seconds inflating in step). RAM-backed
     * scratch restores the per-executor-scaling property the N-vs-4N
     * comparison assumes. tmpfs is typically capped at 50% RAM and must
-    * hold the 2× corpus plus shuffle/spill, so /dev/shm is only chosen
+    * hold the 384k corpus plus shuffle/spill, so /dev/shm is only chosen
     * when it has comfortable headroom (ENOSPC mid-leg on a tight box
     * would be worse than the disk's drift). Override with
     * SPARK_GRAFT_BENCH_SCRATCH. */
   private[graft] lazy val scratchRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_SCRATCH", {
       val shm = new java.io.File("/dev/shm")
-      val needBytes = 16L << 30 // 768k-page corpus ~2 GB + shuffle/spill headroom
+      val needBytes = 16L << 30 // corpus + shuffle/spill, with room to spare
       val root =
         if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= needBytes)
           "/dev/shm"
@@ -88,69 +90,14 @@ object BenchLeg {
     }
   }
 
-  /** Pipeline-tuned session (shared with Bench's in-process fallback):
-    * FIXED shuffle partitioning (default 16 = 4× the high leg's cores,
-    * override via SPARK_GRAFT_BENCH_SHUFFLE_PARTS) with AQE
-    * partition-coalescing OFF — AQE otherwise coalesces the pipeline's
-    * mid-size shuffles down to 1-2 post-shuffle partitions and
-    * serializes whole stages. The partition count deliberately does NOT
-    * scale with the leg's cores: a cluster job's shuffle.partitions is a
-    * job property, not a cluster-size property (Spark's own default is a
-    * static 200), and per-leg partition counts would make the two legs
-    * run different task layouts — the N-core leg must execute the SAME
-    * job with less parallelism, not a cheaper job. 8 MB splits so a
-    * few-hundred-MB corpus still scans with `cores` tasks. */
-  def pipelineSession(cores: Int): SparkSession = {
-    val parts = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE_PARTS", "16").toInt
-    // RAM-backed shuffle/spill dir (see scratchRoot); honor an explicit
-    // -Dspark.local.dir (forked legs get a per-run dir from Bench), else
-    // a per-pid dir cleaned on JVM exit
-    val localDir = sys.props.getOrElse("spark.local.dir", {
-      val d = s"$scratchRoot/graft-leg-local-${ProcessHandle.current().pid()}"
-      // hook registration throws if the JVM is ALREADY shutting down —
-      // exactly the in-process-fallback-after-SIGTERM path; a missed
-      // cleanup beats the r4 crash (IllegalStateException at this line
-      // was the uncaught exception in the BENCH_r04 tail)
-      try Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()))
-      catch { case _: IllegalStateException => () }
-      d
-    })
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-leg-$cores")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "true"))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  def runLeg(spark: SparkSession, pagesPath: String, dumpPath: String,
-             workDir: String): (Long, Double) = {
-    val t0 = System.nanoTime()
-    val out = graft.kg.Pipeline.run(spark,
-      spark.read.parquet(pagesPath), spark.read.parquet(dumpPath), workDir)
-    val nTriples = out.triples.count()
-    (nTriples, (System.nanoTime() - t0) / 1e9)
-  }
-
   /** Leg-level diagnostics: where did the wall go — mutator task time,
     * GC, or JIT compilation still running inside the timed window? The
-    * task/gc/jit figures ride the JSON contract line (object header
-    * above) as regime evidence; per-phase breakdowns also go to stderr.
+    * figures ride the contract line as regime evidence and go to stderr.
     * Counter windows are made exact by draining the async listener bus
     * at both edges (GraftListenerBridge). */
   private final class Diag(spark: SparkSession) {
-    @volatile var taskSec = 0.0
-    @volatile var gcSec = 0.0
+    @volatile private var taskSec = 0.0
+    @volatile private var gcSec = 0.0
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
@@ -160,18 +107,19 @@ object BenchLeg {
           gcSec += m.jvmGCTime / 1e3
         }
       })
-    private var jit0 = 0L
-    def mark(): Unit = {
+    /** Run `f`, returning its result, wall, task, GC and JIT seconds. */
+    def window[T](tag: String)(f: => T): (T, Double, Double, Double, Double) = {
       org.apache.spark.GraftListenerBridge.drainListeners(spark.sparkContext)
-      taskSec = 0.0; gcSec = 0.0; jit0 = totalJitMs
+      taskSec = 0.0; gcSec = 0.0
+      val (jit0, t0) = (totalJitMs, System.nanoTime())
+      val r = f
+      val wall = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.GraftListenerBridge.drainListeners(spark.sparkContext)
+      val jit = (totalJitMs - jit0) / 1e3
+      System.err.println(f"[bench-leg] $tag wall=$wall%.1f taskSec=$taskSec%.1f " +
+        f"gcSec=$gcSec%.1f jitSec=$jit%.1f")
+      (r, wall, taskSec, gcSec, jit)
     }
-    def jitSinceMark: Double = (totalJitMs - jit0) / 1e3
-    def settle(): Unit =
-      org.apache.spark.GraftListenerBridge.drainListeners(spark.sparkContext)
-    def report(tag: String, wall: Double): Unit =
-      System.err.println(
-        f"[bench-leg] $tag wall=$wall%.1f taskSec=$taskSec%.1f " +
-          f"gcSec=$gcSec%.1f jitSec=$jitSinceMark%.1f")
   }
 
   private def totalJitMs: Long =
@@ -191,10 +139,8 @@ object BenchLeg {
     * in-window JIT. While the mutator sleeps the compiler has the
     * pinned core to itself, so the queue drains at full speed; both
     * legs run the same settle, and a real cluster's long-running warm
-    * executors have no in-window JIT at all. Returns the settle wall;
-    * the cost is charged to the leg's overhead (forkWall − sec) like
-    * the rest of warmup. */
-  private def settleJit(capSec: Double): Double = {
+    * executors have no in-window JIT at all. */
+  private def settleJit(capSec: Double): Unit = {
     val t0 = System.nanoTime()
     var last = totalJitMs
     var quiet = false
@@ -204,100 +150,47 @@ object BenchLeg {
       quiet = now - last < 800
       last = now
     }
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** JIT/classload warmup: one pipeline pass over a tiny slice of the
-    * same inputs (same code paths, negligible data). A fresh JVM
-    * otherwise spends ~30-60 s compiling the Spark stack + generated
-    * code INSIDE the timed window — a fixed cost that lands in the
-    * parallelism-independent floor and corrupts the N-vs-4N comparison
-    * (executors on a real cluster are warm long-running JVMs). Sizing is
-    * deadline-aware via the parent-chosen mode: "full" (800 pages) when
-    * time is comfortable, "short" (200) when thin, "skip" when a cold
-    * leg with ~40-90 s of in-window JIT beats having no leg at all —
-    * the mode rides the contract line so the caveat stays visible. */
-  private def warmup(spark: SparkSession, pagesPath: String,
-                     dumpPath: String, workDir: String, mode: String): Unit = {
-    val (defPages, defLines) = if (mode == "short") (200, 80) else (800, 300)
-    val pages = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PAGES", defPages.toString).toInt
-    val lines = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_LINES", defLines.toString).toInt
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_PASSES", "1").toInt
-    (1 to passes).foreach { p =>
-      val dir = s"$workDir-warmup$p"
-      try {
-        val out = graft.kg.Pipeline.run(spark,
-          spark.read.parquet(pagesPath).limit(pages),
-          spark.read.parquet(dumpPath).limit(lines), dir)
-        out.triples.count()
-      } catch { case e: Exception =>
-        System.err.println(s"[bench-leg] warmup failed (non-fatal): $e")
-      } finally {
-        scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
-      }
-    }
   }
 
   def main(args: Array[String]): Unit = try {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val Array(pagesPath, dumpPath, workDir, coresStr) = args
     val cores = coresStr.toInt
-    val mode = sys.env.getOrElse("SPARK_GRAFT_LEG_WARMUP", "full")
-    val spark = pipelineSession(cores)
+    // per-run shuffle/spill dir inside workDir: RAM-backed and deleted
+    // with the rest of the run's scratch by Bench
+    val spark = Sessions.local(cores, ShufflePartitions, Some(s"$workDir/_sparklocal"))
     val diag = new Diag(spark)
-    val wWall =
-      if (mode == "skip") 0.0
-      else {
-        val t0 = System.nanoTime()
-        warmup(spark, pagesPath, dumpPath, workDir, mode)
-        // cap is a safety valve, not a budget: every observed settle across
-        // the dress/stress runs finished quiet in one 3 s slice, and a
-        // capped-out settle would leave residual JIT asymmetrically inside
-        // the 1-core window — so the cap sits well above any observed need
-        val settle = settleJit(if (mode == "full") 150.0 else 45.0)
-        System.err.println(f"[bench-leg] jit settle wall=$settle%.1f")
-        (System.nanoTime() - t0) / 1e9
+    def pages = spark.read.parquet(pagesPath)
+    def dump = spark.read.parquet(dumpPath)
+    // JIT/classload warmup: one pipeline run over a tiny slice of the
+    // same inputs (same code paths, negligible data). A fresh JVM
+    // otherwise spends ~30-60 s compiling the Spark stack + generated
+    // code INSIDE the timed window — a fixed cost that lands in the
+    // parallelism-independent floor and corrupts the N-vs-4N comparison
+    // (executors on a real cluster are warm long-running JVMs). The
+    // settle cap is a safety valve, not a budget: every observed settle
+    // finished quiet in one 3 s slice, and a capped-out settle would
+    // leave residual JIT asymmetrically inside the 1-core window.
+    val (_, warmSec, _, _, _) = diag.window("warmup") {
+      try graft.kg.Pipeline.run(spark, pages.limit(800), dump.limit(300),
+        s"$workDir-warmup").triples.count()
+      catch { case e: Exception =>
+        System.err.println(s"[bench-leg] warmup failed (non-fatal): $e")
+      } finally {
+        scala.reflect.io.Directory(new java.io.File(s"$workDir-warmup")).deleteRecursively()
       }
-    diag.report("warmup", wWall)
-    val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_LEG_PASSES", "1").toInt)
-    // (sec, triples, taskSec, gcSec, jitSec) per pass; each pass gets a
-    // fresh stage dir so the pipeline's _COMMITTED resume markers cannot
-    // leak work between passes (and no .cache()/.persist() exists in the
-    // pipeline for CacheManager to match across passes — verified)
-    val runs = (1 to passes).flatMap { p =>
-      try {
-        if (p > 1) {
-          val s = settleJit(30.0)
-          System.err.println(f"[bench-leg] inter-pass jit settle wall=$s%.1f")
-        }
-        diag.mark()
-        val (nTriples, sec) = runLeg(spark, pagesPath, dumpPath, s"$workDir/p$p")
-        diag.settle()
-        diag.report(s"main p$p", sec)
-        Some((sec, nTriples, diag.taskSec, diag.gcSec, diag.jitSinceMark))
-      } catch {
-        // a failed LATER pass must not discard the banked earlier passes
-        // (e.g. transient scratch ENOSPC on pass 2 of a diagnostic run):
-        // report the min over completed passes. Pass 1 has nothing banked,
-        // so its failure stays fatal.
-        case e: Throwable if p > 1 =>
-          System.err.println(s"[bench-leg] pass $p failed (keeping " +
-            s"${p - 1} completed pass(es)): $e")
-          None
-      }
+      settleJit(150.0)
     }
-    if (runs.map(_._2).distinct.size > 1)
-      System.err.println(s"[bench-leg] WARNING: triples differ across passes: " +
-        runs.map(_._2).mkString(","))
-    val (sec, nTriples, taskSec, gcSec, jitSec) = runs.minBy(_._1)
-    val cold = if (passes > 1) f""","cold_sec":${runs.head._1}%.1f""" else ""
+    // the measured run gets its own stage dir so the warmup's
+    // _COMMITTED resume markers cannot leak work into it (and no
+    // .cache()/.persist() exists in the pipeline for CacheManager to
+    // match across runs — verified)
+    val (nTriples, sec, taskSec, gcSec, jitSec) =
+      diag.window("main") {
+        graft.kg.Pipeline.run(spark, pages, dump, s"$workDir/run").triples.count() }
     spark.stop()
-    // contract line (see object header): sec+triples are the measurement;
-    // task/gc/jit/warmup are the regime evidence the artifact carries so
-    // a sub-1.0 efficiency is attributable (near-equal task_sec across
-    // legs = same work at both cluster sizes; the residual wall-ratio gap
-    // is shared single-box memory bandwidth, not poor parallelism)
-    println(f"""{"cores":$cores,"sec":$sec%.3f,"triples":$nTriples,"task_sec":$taskSec%.1f,"gc_sec":$gcSec%.1f,"jit_sec":$jitSec%.1f,"warmup":"$mode","warmup_sec":$wWall%.1f$cold}""")
+    // the contract line (object header)
+    println(f"""{"cores":$cores,"sec":$sec%.3f,"triples":$nTriples,"task_sec":$taskSec%.1f,"gc_sec":$gcSec%.1f,"jit_sec":$jitSec%.1f,"warmup_sec":$warmSec%.1f}""")
   } catch {
     case e: Throwable =>
       // a SIGTERM'd leg runs its shutdown hooks (which stop the

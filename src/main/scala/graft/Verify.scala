@@ -1,22 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/compare.py sfDir outDir`).
+  *
+  * args: sfDir outDir [query …]. With no query names every query is
+  * dumped; with names, only those queries and their oracle SQL are
+  * written, for quick cross-checks of a subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local(cpus, cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -34,7 +35,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

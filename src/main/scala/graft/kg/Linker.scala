@@ -21,16 +21,6 @@ case class LinkerConfig(
     softFiltering: Boolean = false,
     saltShards: Int = 8,
     hotTokenDf: Long = 100000L,
-    maxGramDf: Long = 500000L,
-    /** Candidate-generation blocking (Lucene common-terms /
-      * minimum_should_match analog): a token whose posting list exceeds
-      * this df does NOT generate candidates for a mention that also has a
-      * rarer token — "the"/"of"-class tokens otherwise join every film
-      * with every film (O(n²) candidate blowup). Common tokens still
-      * contribute to jaccard/ngram features (computed from full token
-      * sets), only their idf (low by construction) leaves es_raw.
-      * 0 = auto: max(64, 0.5% of name rows). */
-    commonTokenDf: Long = 0L,
     /** ES minimum_should_match analog for the pipeline path: a candidate
       * must match ≥ min(2, mention ntokens) tokens — both tokens of a
       * 2-token mention, ≥2 of a longer one. OFF for lookup parity (the
@@ -61,31 +51,7 @@ case class LinkerConfig(
       * denormalized (popularity_norm × index max popularity — requires
       * NameIndexTables.maxPopularity) and es_score is the raw lexical
       * score, not divided by the per-mention max. */
-    normalizeScore: Boolean = true,
-    /** Two-pass retrieval for the linking path (minShouldMatch only):
-      * fuzzy expansion runs ONLY for mentions whose exact/pair candidate
-      * generation came up empty. On clean corpora (anchor-text mentions)
-      * this removes ~all fuzzy-expansion volume; a typo mention has no
-      * exact candidates and still gets the full fuzzy pass. OFF for
-      * lookup parity — the reference's ES query always scores fuzzy
-      * clauses alongside exact ones. */
-    fuzzyFallbackOnly: Boolean = false,
-    /** ES `max_expansions` (default 50): how many closest index terms a
-      * mention token may fuzzy-expand to. Linking runs can use a much
-      * tighter cap — the expansion join volume is linear in it, and terms
-      * beyond the first few nearest ones never win the composite. */
-    maxFuzzyExpansions: Int = 50,
-    /** Linking-branch fuzzy candidate generation. false (default) =
-      * single-token posting expansion with common-token blocking — the
-      * cheaper shape when posting lists are well-blocked (measured 2×
-      * less work on the bench corpus). true = through the PAIR-posting
-      * table (fuzzy-corrected token × other mention token): candidates
-      * that could never clear minimum-should-match die at the pair join —
-      * the right shape when even blocked single-token posting lists fan
-      * out too far (very large corpora with long tail-token postings);
-      * drops all-tokens-typo'd candidates (documented). Both produce the
-      * same links on the bench corpus (A/B in tools/ProfileLinks2). */
-    fuzzyPairGen: Boolean = false)
+    normalizeScore: Boolean = true)
 
 /** Stages 7-9 — candidate generation, scoring, top-k: the distributed
   * re-realization of the reference's lookup
@@ -113,6 +79,25 @@ case class LinkerConfig(
   * exact `levenshtein` re-check.
   */
 object Linker {
+
+  /** Gram-posting prune: a 3-gram whose posting list exceeds this df is
+    * dropped from the fuzzy gram join (bounded fan-out; documented cap). */
+  private val MaxGramDf: Long = 500000L
+
+  /** Candidate-generation blocking (Lucene common-terms /
+    * minimum_should_match analog): a token whose posting list exceeds
+    * max(64, 0.5% of name rows) does NOT generate candidates for a
+    * mention that also has a rarer token — "the"/"of"-class tokens
+    * otherwise join every film with every film (O(n²) candidate blowup).
+    * Common tokens still contribute to jaccard/ngram features (computed
+    * from full token sets), only their idf (low by construction) leaves
+    * es_raw. */
+  private def commonTokenDf(nameRows: Double): Long =
+    math.max(64L, (nameRows * 0.005).toLong)
+
+  /** ES `max_expansions` (default 50): how many closest index terms a
+    * mention token may fuzzy-expand to. */
+  private val MaxFuzzyExpansions = 50
 
   /** Max name rows for which the per-row idf_map table rides a broadcast
     * in candidate scoring (~200 B/row ⇒ ≲200 MB at the bound — the same
@@ -146,7 +131,7 @@ object Linker {
 
   /** Exact token matches: (mention_norm, name_row_id, token), salted on
     * hot tokens so one mega-posting token cannot pin a shuffle partition,
-    * with common-token blocking (see LinkerConfig.commonTokenDf).
+    * with common-token blocking (see [[commonTokenDf]]).
     * @param postings (token, name_row_id)
     * @param tokenDf  (token, df) posting-list lengths */
   /** The generation-eligible (mention, token) pairs after common-token
@@ -313,7 +298,7 @@ object Linker {
             .map(t => (t, lev(m, t)))
             .filter { case (_, l) => l >= 1 && l <= d }
             .sortBy { case (t, l) => (l, t) }
-            .take(cfg.maxFuzzyExpansions)
+            .take(MaxFuzzyExpansions)
             .map { case (t, _) => (m, t) }
         }
       }
@@ -339,7 +324,7 @@ object Linker {
 
     // prune ultra-common grams (bounded fan-out; documented cap)
     val gramDf = postings3g.groupBy("gram").count()
-    val p3 = postings3g.join(gramDf.filter(col("count") <= cfg.maxGramDf), Seq("gram"))
+    val p3 = postings3g.join(gramDf.filter(col("count") <= MaxGramDf), Seq("gram"))
       .select("gram", "token")
 
     val d = autoFuzzEdits(length(col("mtok")))
@@ -374,12 +359,12 @@ object Linker {
       // here would re-derive every exact match through the gram join
       .filter(col("lev") <= autoFuzzEdits(length(col("mtok"))) && col("lev") >= 1)
 
-    // ES max_expansions: keep the cfg.maxFuzzyExpansions closest index
+    // ES max_expansions: keep the MaxFuzzyExpansions closest index
     // terms per mention token, deterministic (lev asc, token asc)
     val wExp = Window.partitionBy(col("mtok")).orderBy(col("lev").asc, col("token").asc)
     verified
       .withColumn("exp_rank", row_number().over(wExp))
-      .filter(col("exp_rank") <= cfg.maxFuzzyExpansions)
+      .filter(col("exp_rank") <= MaxFuzzyExpansions)
       .select(col("mtok"), col("token"))
   }
 
@@ -399,59 +384,11 @@ object Linker {
     if (dedupTriples) raw.distinct() else raw
   }
 
-  /** (mention_norm, name_row_id, fuzzy-token, idf) rows → the aggregated
-    * (n_f, idf_f) stats over DISTINCT fuzzy tokens not already in the
-    * mention's token set — one shuffle, no triple-level distinct. */
-  private def fuzzyAggregate(hits: DataFrame): DataFrame =
-    hits
-      .groupBy(col("mention_norm"), col("name_row_id"))
-      .agg(collect_set(when(!array_contains(col("mention_tokens"), col("token")),
-        struct(col("token"), coalesce(col("idf"), lit(0.0)).as("idf")))).as("fs"))
-      .select(col("mention_norm"), col("name_row_id"),
-        size(col("fs")).cast("long").as("n_f"),
-        aggregate(col("fs"), lit(0.0), (acc, x) => acc + x.getField("idf")).as("idf_f"))
-
-  /** Fuzzy candidates for MULTI-token mentions in the linking branch,
-    * generated through the PAIR-POSTING table: a fuzzy-corrected token is
-    * paired with each OTHER mention token and joined against the
-    * candidate-blocking pair index — a fuzzy candidate that cannot also
-    * match a second mention token (and so could never clear
-    * minimum_should_match) dies at the pair join instead of fanning out
-    * through the single-token posting lists (8M+ rows at bench scale).
-    * Documented recall cut vs the OR path: a multi-token mention with ALL
-    * matched tokens fuzzy (every token typo'd) is not generated. */
-  private def fuzzyPairAgg(mdMulti: DataFrame, expansions: DataFrame,
-                           pairTable: DataFrame, pairDf: DataFrame,
-                           commonDf: Long, idf: DataFrame): DataFrame = {
-    val mentionTok = mdMulti.select(col("mention_norm"), col("mention_tokens"),
-      explode(col("mention_tokens")).as("mtok"))
-    val exp = mentionTok.join(expansions, Seq("mtok"))
-      .select(col("mention_norm"), col("mention_tokens"), col("mtok"),
-        col("token").as("ftok"))
-    val pairs = exp
-      .select(col("mention_norm"), col("mention_tokens"), col("ftok"),
-        explode(array_remove(col("mention_tokens"), col("mtok"))).as("otok"))
-      .filter(col("ftok") =!= col("otok"))
-      .withColumn("pair", when(col("ftok") < col("otok"),
-        concat(col("ftok"), lit("|"), col("otok")))
-        .otherwise(concat(col("otok"), lit("|"), col("ftok"))))
-      // the same common-pair blocking as the exact pair path: a hot pair
-      // ("city|of"-class) would fan a single fuzzy token out to thousands
-      // of name rows that minimum-should-match semantics never needed
-      .join(pairDf.filter(col("df") <= commonDf).select("pair"), Seq("pair"),
-        "left_semi")
-    val hits = pairs.join(pairTable, Seq("pair"))
-      .select(col("mention_norm"), col("mention_tokens"), col("name_row_id"),
-        col("ftok").as("token"))
-      .join(idf, Seq("token"), "left")
-    fuzzyAggregate(hits)
-  }
-
-  /** Fuzzy candidates for SINGLE-token mentions (they only need one
-    * match): the plain expansion → posting join, aggregated. */
-  private def fuzzySingleAgg(md1: DataFrame, expansions: DataFrame,
-                             postings: DataFrame, tokenDf: DataFrame,
-                             commonDf: Long, idf: DataFrame): DataFrame = {
+  /** Fuzzy candidates for the linking branch: the plain expansion →
+    * posting join, aggregated to per-candidate (n_f, idf_f) stats. */
+  private def fuzzyCandidateStats(md: DataFrame, expansions: DataFrame,
+                                  postings: DataFrame, tokenDf: DataFrame,
+                                  commonDf: Long, idf: DataFrame): DataFrame = {
     // Dedup + self-token filtering run at the (mention, target-token)
     // level — a table that is tiny BEFORE the posting join (tens of
     // thousands of rows) — instead of on the millions of post-join
@@ -461,11 +398,11 @@ object Linker {
     // The old shape joined the mention-token array onto every triple and
     // collect_set-deduped per candidate (an ObjectHashAggregate over ~8M
     // struct rows at the 384k-page bench — half the fuzzy chain's cost).
-    // Semantics identical to fuzzyAggregate: distinct fuzzy tokens not in
-    // the mention's own token set, with their idf mass.
+    // Semantics: distinct fuzzy tokens not in the mention's own token
+    // set, with their idf mass.
     val rareExpansions = expansions
       .join(tokenDf.filter(col("df") <= commonDf).select("token"), Seq("token"))
-    val mentionTok = md1
+    val mentionTok = md
       .select(col("mention_norm"), explode(col("mention_tokens")).as("mtok"))
     val targets = mentionTok.join(rareExpansions, Seq("mtok"))
       .select(col("mention_norm"), col("token")).distinct()
@@ -658,16 +595,11 @@ object Linker {
       "softFiltering=" + cfg.softFiltering,
       "saltShards=" + cfg.saltShards,
       "hotTokenDf=" + cfg.hotTokenDf,
-      "maxGramDf=" + cfg.maxGramDf,
-      "commonTokenDf=" + cfg.commonTokenDf,
       "minShouldMatch=" + cfg.minShouldMatch,
       "cutByRelevance=" + cfg.cutByRelevance,
       "computeAmbiguity=" + cfg.computeAmbiguity,
       "ids=" + cfg.ids.mkString("[", ",", "]"),
       "normalizeScore=" + cfg.normalizeScore,
-      "fuzzyFallbackOnly=" + cfg.fuzzyFallbackOnly,
-      "maxFuzzyExpansions=" + cfg.maxFuzzyExpansions,
-      "fuzzyPairGen=" + cfg.fuzzyPairGen,
       "minScore=" + minScore,
       "indexFp=" + indexFp)
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -802,9 +734,7 @@ object Linker {
       NameIndex.tokenStats(index.postings).localCheckpoint(eager = false))
     val idf = tokenDf
       .select(col("token"), log(lit(1.0) + lit(nRows) / col("df")).as("idf"))
-    val commonDf =
-      if (cfg.commonTokenDf > 0) cfg.commonTokenDf
-      else math.max(64L, (nRows * 0.005).toLong)
+    val commonDf = commonTokenDf(nRows)
 
     val emptyTriples = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -870,8 +800,6 @@ object Linker {
           tokenDf, commonDf, cfg, index.hotTokens)
           .select(col("mention_norm"), col("name_row_id"))
 
-        // two-pass retrieval (cfg.fuzzyFallbackOnly): the fuzzy expansion
-        // only runs for mentions whose exact/pair generation found nothing
         val baseCands = pairCands.union(singleCands)
         val emptyAgg = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -880,19 +808,9 @@ object Linker {
         val fuzzAgg =
           (if (!cfg.fuzzy) emptyAgg
            else {
-             val mdF =
-               if (!cfg.fuzzyFallbackOnly) mentionsD
-               else mentionsD.join(baseCands.select("mention_norm").distinct(),
-                 Seq("mention_norm"), "left_anti")
-             val exps = fuzzyExpansions(mdF, index.postings3g, tokenDf, cfg)
-               .localCheckpoint(eager = false) // shared by both shapes
-             if (cfg.fuzzyPairGen)
-               fuzzyPairAgg(mdF.filter(size(col("mention_tokens")) >= 2),
-                   exps, pairTable, pairDf, commonDf, idf)
-                 .unionByName(fuzzySingleAgg(
-                   mdF.filter(size(col("mention_tokens")) === 1),
-                   exps, index.postings, tokenDf, commonDf, idf))
-             else fuzzySingleAgg(mdF, exps, index.postings, tokenDf, commonDf, idf)
+             val exps = fuzzyExpansions(mentionsD, index.postings3g, tokenDf, cfg)
+               .localCheckpoint(eager = false)
+             fuzzyCandidateStats(mentionsD, exps, index.postings, tokenDf, commonDf, idf)
            }).localCheckpoint(eager = false) // overlaps the exact-gen chain
 
         // ONE exchange for the entire scoring chain: the candidate stream

@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-logic tests for the bench harness: the artifact line must be
   * valid JSON, complete at every emission point, and short enough to
-  * survive the driver's 2000-char tail window; scheduling helpers must
-  * project and shed sanely. (The fork/kill behavior is exercised
-  * end-to-end by tools/bench rehearsals, not unit tests.) */
+  * survive a 2000-char tail window of the run's output; the headline and the
+  * per-leg statistics follow the fixed protocol. (The fork/kill behavior
+  * is exercised end-to-end by running graft.Bench, not unit tests.) */
 class BenchHarnessSpec extends AnyFunSuite {
 
   private val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -28,175 +28,123 @@ class BenchHarnessSpec extends AnyFunSuite {
     "q_topk_acctbal", "q_union_nations", "q_window_running", "q_winnow")
   private val gates = gateNames.map(n => n -> 110.354)
 
-  private def leg(cores: Int, sec: Double, nRuns: Int, tps: Double,
-                  warmup: String = "full") =
-    Bench.LegStat(cores, sec, tps, sec * 0.9, 30.5, 253.1,
-      Vector.fill(nRuns)(sec * 1.37), warmup, fallback = false)
+  private def leg(cores: Int, runs: Seq[Double], tps: Double) = {
+    val best = runs.min
+    val sorted = runs.sorted
+    val med = (sorted((runs.size - 1) / 2) + sorted(runs.size / 2)) / 2
+    Bench.LegStat(cores, Bench.Run((tps * best).round, best, best * 0.9, 30.5, 253.1),
+      med, runs)
+  }
 
+  // contended 3-digit walls: the longest numbers a leg can print
   private def fullState = Seq(
-    Bench.PointStat("pages24k", 24000,
-      Seq(leg(1, 79.9, 3, 284.1), leg(4, 22.8, 3, 996.2, "short"))),
-    Bench.PointStat("pages384k", 384000,
-      Seq(leg(1, 304.8, 6, 1193.6), leg(4, 104.6, 6, 3477.5))),
-    Bench.PointStat("pages768k", 768000,
-      Seq(leg(1, 506.4, 1, 1437.2), leg(4, 188.6, 1, 3859.3))))
+    Bench.PointStat("pages24k", 24000, Seq(
+      leg(1, Seq(179.9, 184.4, 201.3), 284.1),
+      leg(4, Seq(122.8, 125.1, 131.9), 996.2))),
+    Bench.PointStat("pages384k", 384000, Seq(
+      leg(1, Seq(304.8), 1193.6), leg(4, Seq(104.6), 4400.0))))
+
+  private def line(points: Seq[Bench.PointStat], shed: Seq[String] = Nil) =
+    Bench.buildLine(gates, "sf0.1", points, Some((5.81, 18.84)),
+      2, 1480.7, 1680.0, shed)
 
   test("full-state line: valid JSON, under the tail budget, all evidence present") {
-    val line = Bench.buildLine(gates, "/root/testdata/sf0.1", fullState,
-      "pages384k", Some((5.81, 18.84)), 2, 1480.7, 1500.0,
-      Seq("corpus_2x", "gates_pass2", "leg_pages768k_c4"))
-    assert(!line.contains("\n"))
-    assert(line.length <= Bench.MaxLineChars,
-      s"line is ${line.length} chars:\n$line")
-    val j = parse(line)
+    val l = line(fullState,
+      Seq("round3_pages24k", "gates_pass2", "timeout_pages384k_c4"))
+    assert(!l.contains("\n"))
+    assert(l.length <= Bench.MaxLineChars, s"line is ${l.length} chars:\n$l")
+    val j = parse(l)
     assert(j.get("metric").asText == "total")
     assert(math.abs(j.get("value").asDouble - 110.354 * 45) < 1.0)
     assert(j.get("queries").size == 45)
     val p = j.get("pipeline")
-    // legs shown are the primary point's
-    assert(p.get("pages").asInt == 384000)
-    assert(p.get("entities").asInt == 32000)
-    assert(p.get("local1").get("sec").asDouble == 304.8)
-    assert(p.get("local4").get("runs_sec").size == 6)
-    for (k <- Seq("task_sec", "gc_sec", "jit_sec"))
+    // legs shown are the headline point's
+    assert(p.get("pages").asInt == 24000)
+    assert(p.get("entities").asInt == 4000)
+    for (k <- Seq("task_sec", "gc_sec", "jit_sec", "triples_per_sec"))
       assert(p.get("local1").has(k), s"local1 missing $k")
-    // headline = best point (24k here), named
-    val eff24 = (996.2 / 284.1) / 4
-    assert(math.abs(p.get("scaling_efficiency").asDouble - eff24) < 0.001)
-    assert(p.get("scaling_source").asText == "pages24k")
-    assert(p.get("points").size == 3)
+    assert(p.get("points").size == 2)
     assert(math.abs(p.get("mem_probe").get("scaling").asDouble -
       18.84 / 5.81 / 4) < 0.001)
     assert(p.get("shed").size == 3)
     assert(p.get("gate_passes").asInt == 2)
   }
 
-  test("non-full warmup and fallback are tagged on the shown legs") {
-    val st = Seq(Bench.PointStat("pages24k", 24000, Seq(
-      leg(1, 79.9, 2, 284.1, warmup = "skip"),
-      Bench.LegStat(4, 22.8, 996.2, 0, 0, 0, Vector(22.8), "inproc",
-        fallback = true))))
-    val p = parse(Bench.buildLine(gates, "sf", st, "pages384k", None, 1,
-      10, 1500, Nil)).get("pipeline")
-    assert(p.get("local1").get("warmup").asText == "skip")
-    assert(p.get("local4").get("fallback").asBoolean)
+  test("full two-point state with k samples stays within 1,900 chars") {
+    // every leg at the protocol's k, gate values at their widest
+    val st = fullState.map(p => p.copy(legs = p.legs.map(l =>
+      l.copy(runsSec = Seq.fill(if (p.tag == Bench.HeadlineTag)
+        Bench.HeadlineRounds else Bench.PrimaryRounds)(l.best.sec)))))
+    val l = line(st, Seq("round3_pages24k", "gates_pass2", "gates_partial",
+      "point_pages384k", "timeout_pages384k_c4"))
+    assert(l.length <= Bench.MaxLineChars, s"line is ${l.length} chars:\n$l")
+    assert(parse(l).get("pipeline").get("points").size == 2)
+  }
+
+  test("headline source is pages24k even when the 384k point reads higher") {
+    val p = parse(line(fullState)).get("pipeline")
+    val eff24 = (996.2 / 284.1) / 4
+    val eff384 = (4400.0 / 1193.6) / 4
+    assert(eff24 < eff384, "fixture must have the 384k point read higher")
+    assert(p.get("scaling_source").asText == "pages24k")
+    assert(math.abs(p.get("scaling_efficiency").asDouble - eff24) < 0.001)
+    assert(math.abs(p.get("points").get("pages384k").get("eff").asDouble -
+      eff384) < 0.001)
+  }
+
+  test("each shown leg carries median, min and all samples") {
+    val p = parse(line(fullState)).get("pipeline")
+    val l1 = p.get("local1")
+    assert(l1.get("min_sec").asDouble == 179.9)
+    assert(l1.get("med_sec").asDouble == 184.4)
+    assert(l1.get("runs_sec").size == 3)
+    assert(p.get("local4").get("med_sec").asDouble == 125.1)
+    // the other point's legs: min and median per leg in "points"
+    val p384 = p.get("points").get("pages384k")
+    assert(p384.get("min_sec").size == 2 && p384.get("med_sec").size == 2)
   }
 
   test("empty state (killed before any work) still emits a complete line") {
-    val j = parse(Bench.buildLine(Nil, "/root/testdata/sf0.1", Nil,
-      "pages384k", None, 0, 3.2, 1500.0, Nil))
+    val j = parse(Bench.buildLine(Nil, "sf0.1", Nil, None, 0,
+      3.2, 1680.0, Nil))
     assert(j.get("value").asDouble == 0.0)
     assert(j.get("queries").size == 0)
     assert(j.get("pipeline").get("gate_passes").asInt == 0)
     assert(!j.get("pipeline").has("scaling_efficiency"))
+    assert(j.get("pipeline").get("scaling_source").asText == "pages24k")
   }
 
   test("single-leg point (mid-round kill) emits without an efficiency") {
-    val st = Seq(Bench.PointStat("pages24k", 24000, Seq(leg(1, 79.9, 1, 284.1))))
-    val p = parse(Bench.buildLine(gates, "sf", st, "pages384k", None, 0,
-      100, 1500, Nil)).get("pipeline")
-    assert(p.get("local1").get("sec").asDouble == 79.9)
+    val st = Seq(Bench.PointStat("pages24k", 24000, Seq(leg(1, Seq(79.9), 284.1))))
+    val p = parse(Bench.buildLine(gates, "sf", st, None, 0, 100, 1680, Nil))
+      .get("pipeline")
+    assert(p.get("local1").get("min_sec").asDouble == 79.9)
     assert(!p.has("local4"))
     assert(!p.has("scaling_efficiency"))
-    assert(Bench.PointStat("pages24k", 24000, Seq(leg(1, 79.9, 1, 284.1))).eff.isEmpty)
-  }
-
-  test("warmup mode degrades with the remaining deadline") {
-    assert(Bench.warmupMode(1000, 300) == "full")
-    assert(Bench.warmupMode(470, 300) == "short")
-    assert(Bench.warmupMode(350, 300) == "skip")
-  }
-
-  test("mandatory rounds floor warmup at short; optional rounds don't") {
-    // a mandatory round runs even when its projection doesn't fit, and a
-    // long cold leg pays ~300 s of in-window JIT/GC for the ~30 s a short
-    // warmup costs (r5 rehearsal 1)
-    assert(Bench.roundWarmup(350, 300, mandatory = true) == "short")
-    assert(Bench.roundWarmup(350, 300, mandatory = false) == "skip")
-    assert(Bench.roundWarmup(1000, 300, mandatory = true) == "full")
-    assert(Bench.roundWarmup(470, 300, mandatory = true) == "short")
-  }
-
-  test("projection: own samples dominate; cross-corpus scales sublinearly") {
-    val pages = Map("pages24k" -> 24000, "pages384k" -> 384000,
-      "pages768k" -> 768000)
-    val s = Map(("pages24k", 1) -> Vector((80.0, 60.0), (95.0, 65.0)))
-    // own worst sample * 1.1
-    assert(math.abs(Bench.projectLeg(s, pages, "pages24k", 1) - 160.0 * 1.1) < 1e-9)
-    // cross-corpus: BEST main * 16^0.62 + worst overhead, * 1.15 — must
-    // stay well under a linear 16x blowup (which would shed a point that
-    // fits: the r5 first-rehearsal failure) yet above the measured ~3.8x
-    // cost anchor
-    val p384 = Bench.projectLeg(s, pages, "pages384k", 1)
-    assert(math.abs(p384 - (80.0 * math.pow(16, 0.62) + 65.0) * 1.15) < 1e-9)
-    assert(p384 > 80.0 * 3.8 && p384 < (80.0 * 16 + 65) / 2, s"p384=$p384")
-    // no samples for this core count: prior, not an exception
-    assert(Bench.projectLeg(s, pages, "pages384k", 4) > 0)
-  }
-
-  test("optimistic projection: best sample, so one throttled window can't starve extras") {
-    val pages = Map("pages24k" -> 24000)
-    // regime like dress 5: one clean sample, one 2.3x-contended one
-    val s = Map(("pages24k", 1) -> Vector((97.0, 100.0), (220.0, 250.0)))
-    val pess = Bench.projectLeg(s, pages, "pages24k", 1)
-    val opt = Bench.projectLeg(s, pages, "pages24k", 1, optimistic = true)
-    assert(math.abs(pess - 470.0 * 1.1) < 1e-9)
-    assert(math.abs(opt - 197.0 * 1.25) < 1e-9)
-    // the whole point: the optimistic extra round fits a ~400 s idle tail
-    // that the worst-sample projection would leave unspent
-    assert(opt < 400 && pess > 400)
-    // no own samples: optimism changes nothing (cross-corpus/prior paths)
-    assert(Bench.projectLeg(s, pages, "pages24k", 4, optimistic = true) ==
-      Bench.projectLeg(s, pages, "pages24k", 4))
-  }
-
-  test("corpus-gen projection: fixed-cost dominated, never page-linear") {
-    // measured: 24k gen 17.6 s cold / 4.7 s warm, 384k gen 7.8 s warm —
-    // the projection must cover the warm actual with margin but stay far
-    // below the linear model that shed the primary point in rehearsal 1
-    val p = Bench.projectGen(17.6, 384000)
-    assert(p > 7.8 && p < 120, s"genProj=$p")
-    // 2x point projected from the measured primary gen
-    val p2 = Bench.projectGen(7.8, 768000)
-    assert(p2 > 7.8 && p2 < 120, s"genProj2=$p2")
+    assert(st.head.eff.isEmpty)
   }
 
   test("symmetric truncation: a leg's extra sample stays out of the ratio") {
-    def run(sec: Double) =
-      Bench.Run(10000L, sec, sec * 0.9, 1.0, 2.0, "full", fallback = false,
-        overheadSec = 40.0)
+    def run(sec: Double) = Bench.Run(10000L, sec, sec * 0.9, 1.0, 2.0)
     // interrupted round 2: local1 got a second (better) sample, local4
-    // didn't — the min must use only round 1 of each leg, while runs_sec
-    // discloses both samples
+    // didn't — min and median must use only round 1 of each leg, while
+    // runs_sec discloses both samples
     val m = Map(1 -> Vector(run(100.0), run(80.0)), 4 -> Vector(run(30.0)))
-    val legs = Bench.legStatsFor(m, Seq(1, 4))
+    val legs = Bench.legStatsFor(m)
     assert(legs.map(_.cores) == Seq(1, 4))
-    assert(legs.head.sec == 100.0, "leg1 min must truncate to round 1")
+    assert(legs.head.best.sec == 100.0, "leg1 min must truncate to round 1")
+    assert(legs.head.medSec == 100.0, "leg1 median must truncate to round 1")
     assert(legs.head.runsSec == Seq(100.0, 80.0), "all samples disclosed")
-    assert(legs.last.sec == 30.0)
-    // complete rounds: min over all of them
-    val m2 = Map(1 -> Vector(run(100.0), run(80.0)),
-      4 -> Vector(run(30.0), run(25.0)))
-    assert(Bench.legStatsFor(m2, Seq(1, 4)).head.sec == 80.0)
+    assert(legs.last.best.sec == 30.0)
+    // complete rounds: min and median over all of them
+    val m2 = Map(1 -> Vector(run(100.0), run(80.0), run(90.0)),
+      4 -> Vector(run(30.0), run(25.0), run(40.0)))
+    val l2 = Bench.legStatsFor(m2)
+    assert(l2.head.best.sec == 80.0 && l2.head.medSec == 90.0)
+    assert(l2.last.best.sec == 25.0 && l2.last.medSec == 30.0)
     // single leg: no truncation partner, min over own samples
     val m3 = Map(1 -> Vector(run(100.0), run(80.0)))
-    assert(Bench.legStatsFor(m3, Seq(1, 4)).head.sec == 80.0)
-  }
-
-  test("extra rounds: spread-unstable OR below-target headline, capped") {
-    // dress 7: uniformly-throttled pair — stable spread, headline 0.708,
-    // 400+ s idle. The below-target trigger must keep sampling…
-    assert(Bench.wantMoreRounds(2, 6, unstable = false, Some(0.708), 0.8))
-    // …but the round cap still binds,
-    assert(!Bench.wantMoreRounds(6, 6, unstable = false, Some(0.708), 0.8))
-    // an at-target headline with a stable spread stops,
-    assert(!Bench.wantMoreRounds(2, 6, unstable = false, Some(0.83), 0.8))
-    // spread instability alone still triggers (pre-existing behavior),
-    assert(Bench.wantMoreRounds(2, 6, unstable = true, Some(0.83), 0.8))
-    // no two-leg point yet → no target chasing (round-2 gating owns that),
-    assert(!Bench.wantMoreRounds(1, 6, unstable = false, None, 0.8))
-    // and the primary loop's spread-only call site passes bestEff=None
-    assert(!Bench.wantMoreRounds(2, 6, unstable = false, None, 0.8))
+    assert(Bench.legStatsFor(m3).head.best.sec == 80.0)
   }
 
   test("entity cap: fixed-KG production shape") {
@@ -207,14 +155,24 @@ class BenchHarnessSpec extends AnyFunSuite {
   }
 
   test("memory probe returns sane bandwidth figures") {
-    val (s1, s4) = Bench.memProbe()
+    val probe = Bench.memProbe()
+    assert(probe.isDefined, "probe failed")
+    val (s1, s4) = probe.get
     assert(s1 > 0.2, s"single-thread $s1 GB/s implausibly low")
     assert(s4 > s1 * 0.8, s"4-thread aggregate $s4 below single $s1")
-    // no upper bound on s4/s1: the probe measures the ENVIRONMENT, and a
-    // co-tenant hammering the box during the single-thread window makes
-    // the ratio legitimately exceed 4 (dress 10 recorded scaling 3.79 —
-    // single 1.27 GB/s vs 5.2-5.8 quiet). A spec that fails whenever the
-    // host is busy would flake in exactly the regimes the probe exists
-    // to document.
+    // generous ceiling: a co-tenant hammering the box during the
+    // single-thread window legitimately pushes the ratio past 4 (dress 10
+    // recorded 3.79), but 8× means the probe's arithmetic is broken
+    assert(s4 / s1 <= 8, s"4-thread aggregate $s4 is ${s4 / s1}x single " +
+      s"$s1 GB/s; co-tenant regimes can exceed 4, never 8")
+  }
+
+  test("memory probe returns None, and does not hang, when a thread cannot allocate") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // Int.MaxValue bytes is past the JVM's array limit: every probe thread
+    // fails its allocation before reaching the ready latch
+    assert(Await.result(Future(Bench.memProbe(Int.MaxValue)), 60.seconds).isEmpty)
   }
 }
