@@ -35,14 +35,6 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchLeg {
 
-  /** Shuffle partitions: 4× the high leg's cores and the SAME at both
-    * core counts. A cluster job's shuffle.partitions is a job property,
-    * not a cluster-size property (Spark's own default is a static 200);
-    * per-leg counts would make the two legs run different task layouts —
-    * the N-core leg must execute the SAME job with less parallelism, not
-    * a cheaper job. */
-  private val ShufflePartitions = 16
-
   /** RAM-backed scratch root for bench corpora, stage workdirs and Spark
     * local dirs (shuffle files, spills, localCheckpoint disk tier).
     *
@@ -157,8 +149,9 @@ object BenchLeg {
     val Array(pagesPath, dumpPath, workDir, coresStr) = args
     val cores = coresStr.toInt
     // per-run shuffle/spill dir inside workDir: RAM-backed and deleted
-    // with the rest of the run's scratch by Bench
-    val spark = Sessions.local(cores, ShufflePartitions, Some(s"$workDir/_sparklocal"))
+    // with the rest of the run's scratch by Bench; the 16 shuffle
+    // partitions are the same at both core counts (see Sessions)
+    val spark = Sessions.local(cores, Some(s"$workDir/_sparklocal"))
     val diag = new Diag(spark)
     def pages = spark.read.parquet(pagesPath)
     def dump = spark.read.parquet(dumpPath)

@@ -16,18 +16,20 @@ import org.apache.spark.sql.SparkSession
   *    serializes whole stages;
   *  - 8 MB file splits: the bench corpora are a few hundred MB, and
   *    default 128 MB splits would scan them with 1-3 tasks regardless of
-  *    cores.
-  *
-  * The shuffle partition count is the caller's: it is a property of the
-  * job (the pipeline legs keep 16 at every core count so both legs run
-  * the same task layout), not of the cluster. */
+  *    cores;
+  *  - 16 shuffle partitions (4x the bench's high leg) at EVERY core
+  *    count. A cluster job's shuffle.partitions is a job property, not a
+  *    cluster-size property (Spark's own default is a static 200);
+  *    per-leg counts would make the bench's two legs run different task
+  *    layouts: the N-core leg must execute the SAME job with less
+  *    parallelism, not a cheaper job. */
 object Sessions {
 
   /** The `spark.*` settings [[local]] applies, in application order. */
-  private[graft] def settings(cores: Int, shufflePartitions: Int): Seq[(String, String)] =
+  private[graft] def settings(cores: Int): Seq[(String, String)] =
     Seq(
       "spark.master" -> s"local[$cores]",
-      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.shuffle.partitions" -> "16",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -38,10 +40,9 @@ object Sessions {
   /** A local[`cores`] session with the fixed settings above, logging at
     * WARN. `localDir` places shuffle and spill files (the bench puts them
     * on RAM-backed scratch, see [[BenchLeg.scratchRoot]]). */
-  def local(cores: Int, shufflePartitions: Int,
-            localDir: Option[String] = None): SparkSession = {
+  def local(cores: Int, localDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder().appName(s"graft-local-$cores")
-    settings(cores, shufflePartitions).foreach { case (k, v) => b.config(k, v) }
+    settings(cores).foreach { case (k, v) => b.config(k, v) }
     localDir.foreach(d => b.config("spark.local.dir", d))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -14,7 +14,7 @@ object Verify {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Sessions.local(cpus, cpus)
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -107,7 +107,9 @@ class BenchHarnessSpec extends AnyFunSuite {
   test("empty state (killed before any work) still emits a complete line") {
     val j = parse(Bench.buildLine(Nil, "sf0.1", Nil, None, 0,
       3.2, 1680.0, Nil))
-    assert(j.get("value").asDouble == 0.0)
+    // no gate ran: the total is null, not a perfect 0.00, and shed says why
+    assert(j.get("value").isNull)
+    assert(j.get("pipeline").get("shed").toString == "[\"gates_not_run\"]")
     assert(j.get("queries").size == 0)
     assert(j.get("pipeline").get("gate_passes").asInt == 0)
     assert(!j.get("pipeline").has("scaling_efficiency"))

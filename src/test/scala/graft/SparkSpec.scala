@@ -12,5 +12,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = Sessions.local(4, 4)
+  lazy val session: SparkSession = Sessions.local(4)
 }
